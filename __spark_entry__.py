@@ -136,6 +136,110 @@ def _images_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# pixel-rule codec roundtrips: each query encodes the deterministic pixel
+# rule (georef.np_image_pixels) of the images with i % PALETTED_MOD == r
+# through a codec and back; its oracle rebuilds the same pixels in SQL
+# ---------------------------------------------------------------------------
+
+PALETTED_MOD = 499  # image subset of the pixel-rule codec roundtrips
+
+# one (fmt, band, checksum) row per decoded band, see band_checksum_rows
+FMT_BAND_CHECKSUM = "image_id string, fmt string, band int, checksum int"
+
+
+def _pixel_rule_query(spark: SparkSession, sf_dir: str, residue: int,
+                      schema: str, per_image, cols=()) -> DataFrame:
+    """The images with i % PALETTED_MOD == residue through ONE
+    mapInPandas that calls per_image(px, img) with the image's pixel
+    rule px = np_image_pixels(i, w, h) and its geo row img (i,
+    image_id, w, h and `cols`).  per_image returns the image's rows as
+    dicts; every row also carries i and image_id, and `schema` (DDL)
+    keeps the columns it names."""
+    from pyspark.sql.types import StructType
+
+    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == residue)
+    geo = build_images(spark, ids_df=ids, with_payload=False).select(
+        "i", "image_id", "w", "h", *cols)
+    schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def run(batches):
+        from gdal_spark.fixtures.georef import np_image_pixels
+
+        for pdf in batches:
+            rows = []
+            for img in pdf.itertuples(index=False):
+                px = np_image_pixels(img.i, img.w, img.h)
+                rows += [{"i": img.i, "image_id": img.image_id, **r}
+                         for r in per_image(px, img)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return geo.mapInPandas(run, schema)
+
+
+_PRIMES_SQL = "[7,11,13,17,19,23,29,31,37,41,43]"
+
+
+def _sql_checksum(val: str = "val", pidx: str = "pidx") -> str:
+    """DuckDB twin of raster/checksum.gdal_checksum: the GDAL checksum
+    aggregate of the non-negative integer `val` over the row-major
+    pixel index `pidx`."""
+    return (f"cast(sum(({val}) % ({_PRIMES_SQL})[(({pidx}) % 11) + 1])"
+            " % 65536 as int)")
+
+
+def _o_images(residue: int) -> str:
+    """Images-geo CTE body of the ids with i % PALETTED_MOD == residue."""
+    return georef.sql_images_cte(
+        "o_orderkey",
+        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
+        f" = {residue})",
+    )
+
+
+def _o_pixel_ctes(residue: int, variants=(("band0", 1),),
+                  val: str = "v * mult + shift", w: str = "i.w",
+                  h: str = "i.h") -> str:
+    """`WITH img, px` — the CTEs a pixel-rule oracle starts from.  img
+    is _o_images(residue); px has one row per pixel x < w, y < h of
+    each band of each variant (fmt, nb[, mult[, shift]]) with the img
+    columns i, image_id, w, h, lon_c, lat_c, the variant's fmt, band,
+    mult and shift, the rule value v = (x + y + i + phase) % 256 of the
+    band, the decoded value `val` (SQL over those columns) and the
+    row-major index pidx = y * w + x.  w and h are SQL over img `i` and
+    the variant `f`, so a variant can crop its window."""
+    rows = ", ".join(
+        "('{}', {}, {}, {})".format(*v, *(1, 0)[len(v) - 2:])
+        for v in variants
+    )
+    return f"""
+WITH img AS ({_o_images(residue)}),
+grid AS (
+  SELECT i.i, i.image_id, i.w, i.h, i.lon_c, i.lat_c,
+    f.fmt, b.band, f.mult, f.shift, gx.x, gy.y, {w} AS pw,
+    (gx.x + gy.y + i.i
+     + CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END) % 256 AS v
+  FROM img i
+  CROSS JOIN (VALUES {rows}) AS f(fmt, nb, mult, shift)
+  JOIN range(0, 3) AS b(band) ON b.band < f.nb
+  JOIN range(0, 512) AS gx(x) ON gx.x < {w}
+  JOIN range(0, 512) AS gy(y) ON gy.y < {h}
+),
+px AS (
+  SELECT *, {val} AS val, y * pw + x AS pidx FROM grid
+)"""
+
+
+def _o_variant_checksums(residue: int, variants, **grid) -> str:
+    """Oracle of a roundtrip whose rows are the (image_id, fmt, band,
+    checksum) of every band of every variant (see _o_pixel_ctes)."""
+    return f"""{_o_pixel_ctes(residue, variants, **grid)}
+SELECT image_id, fmt, cast(band as int) AS band, {_sql_checksum()} AS checksum
+FROM px GROUP BY image_id, fmt, band
+"""
+
+
+# ---------------------------------------------------------------------------
 # entry: flagship — derive geo, PIP-join zones, assign tiles, count
 # ---------------------------------------------------------------------------
 
@@ -1272,11 +1376,7 @@ def q_jsonfg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _o_jsonfg() -> str:
     from gdal_spark.tiles import tilemath as _tm
 
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 163)",
-    )
+    img = _o_images(163)
     r = _tm.sql_double(6378137.0)
     return f"""
 WITH img AS ({img})
@@ -1654,9 +1754,6 @@ def q_vrt_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(out*16) (a power-of-2 quantum: the only roundings are the
     LUT's slope division and interpolation multiply, identical IEEE
     ops on both engines)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     from gdal_spark.sources.vrt import parse_vrt
 
     doc = """<VRTDataset rasterXSize="8" rasterYSize="4">
@@ -1683,70 +1780,37 @@ def q_vrt_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
         tuple(src["lut_in"]), tuple(src["lut_out"]),
     )
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 17)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_nodata", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.sources.vrt import apply_complex_source
 
         ratio, off, nodata, li, lo = params
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                band = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                out, valid = apply_complex_source(
-                    band, ratio, off, nodata, li, lo
-                )
-                q = np.where(valid, np.floor(out * 16.0), 0.0).astype(
-                    np.int64
-                )
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(q),
-                        "n_nodata": int((~valid).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        out, valid = apply_complex_source(
+            px[:, :, 0], ratio, off, nodata, li, lo
+        )
+        q = np.where(valid, np.floor(out * 16.0), 0.0).astype(
+            np.int64
+        )
+        return [
+            {
+                "checksum": gdal_checksum(q),
+                "n_nodata": int((~valid).sum()),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 17, "image_id string, checksum int, n_nodata int",
+        per_image)
 
 
 def _o_vrt_lut() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 17)",
-    )
     # v2 = val*0.5 + 16 (exact dyadic); LUT 10:100,100:40,250:224 with
     # the reference's interpolation expression shape — identical IEEE
     # op order to sources/vrt.py lookup_lut, so floor(out*16) matches
     # bit-for-bit.
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-),
+    return f"""{_o_pixel_ctes(17)},
 ev AS (
   SELECT image_id, pidx, val,
     cast(val as double) * cast('0.5' as double)
@@ -1774,9 +1838,7 @@ q AS (
     CASE WHEN val = 77 THEN 1 ELSE 0 END AS nd
   FROM ev
 )
-SELECT image_id,
-  cast(sum(qv % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum,
+SELECT image_id, {_sql_checksum("qv")} AS checksum,
   cast(sum(nd) as int) AS n_nodata
 FROM q GROUP BY image_id
 """
@@ -3489,44 +3551,26 @@ def q_rat(spark: SparkSession, sf_dir: str) -> DataFrame:
     the thematic table (metadata-sized — the scale shape of
     gdalinfo -stats on a classified raster).  The XML PAM form
     (Serialize/parse) is covered in tests/test_rat.py."""
-    import pandas as pd2
-    from pyspark.sql import types as T2
+    import numpy as np
 
     from gdal_spark.raster.rat import rat_from_band_counts
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 7)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "w", "h")
-    schema = T2.StructType([
-        T2.StructField("value", T2.IntegerType()),
-        T2.StructField("pixel_count", T2.LongType()),
-    ])
+    gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
 
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.png import (
             decode_png_paletted,
             encode_png_paletted,
         )
 
-        gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
-        for pdf in batches:
-            tot = np.zeros(256, dtype=np.int64)
-            for i, w, h in zip(pdf["i"], pdf["w"], pdf["h"]):
-                idx = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                band = decode_png_paletted(
-                    encode_png_paletted(idx, gray))[0]
-                tot += np.bincount(band.ravel(), minlength=256)
-            yield pd2.DataFrame(
-                {"value": np.arange(256, dtype=np.int32),
-                 "pixel_count": tot})
+        band = decode_png_paletted(encode_png_paletted(px[:, :, 0], gray))[0]
+        tot = np.bincount(band.ravel(), minlength=256)
+        return [{"value": v, "pixel_count": int(n)} for v, n in enumerate(tot)]
 
-    import numpy as np
-
-    counts = geo.mapInPandas(run, schema)
-    gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
+    counts = _pixel_rule_query(
+        spark, sf_dir, 7, "value int, pixel_count bigint", per_image)
     rat, _fields = rat_from_band_counts(counts, gray)
     return rat.select(
         F.col("value").cast("int"),
@@ -3927,9 +3971,6 @@ FROM px GROUP BY grp, band
 """
 
 
-GIF_MOD = 499  # image subset for the GIF codec oracle
-
-
 def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF87a codec (frmts/gif/gifdataset.cpp single-Byte-band +
     color-table model; variable-width LZW per the published GIF89a
@@ -3937,87 +3978,45 @@ def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode back from the real GIF bytes, and report per-band checksum
     / min / max plus the distinct-color count recovered from the
     decoded raster — all matched to the pixel-rule closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % GIF_MOD == 0)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vmin", T2.IntegerType()),
-            T2.StructField("vmax", T2.IntegerType()),
-            T2.StructField("n_colors", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.gif import decode_gif_rgb, encode_gif_rgb
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                back = decode_gif_rgb(encode_gif_rgb(arr))
-                flat = back.reshape(-1, 3).astype(np.int64)
-                packed = (flat[:, 0] << 16) | (flat[:, 1] << 8) | flat[:, 2]
-                nc = int(len(np.unique(packed)))
-                for b in range(3):
-                    band = back[:, :, b]
-                    rows.append(
-                        {
-                            "image_id": img_id,
-                            "band": b,
-                            "checksum": gdal_checksum(band),
-                            "vmin": int(band.min()),
-                            "vmax": int(band.max()),
-                            "n_colors": nc,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        back = decode_gif_rgb(encode_gif_rgb(px))
+        flat = back.reshape(-1, 3).astype(np.int64)
+        packed = (flat[:, 0] << 16) | (flat[:, 1] << 8) | flat[:, 2]
+        nc = int(len(np.unique(packed)))
+        rows = []
+        for b in range(3):
+            band = back[:, :, b]
+            rows.append(
+                {
+                    "band": b,
+                    "checksum": gdal_checksum(band),
+                    "vmin": int(band.min()),
+                    "vmax": int(band.max()),
+                    "n_colors": nc,
+                }
+            )
+        return rows
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 0,
+        "image_id string, band int, checksum int, vmin int, vmax int,"
+        " n_colors int",
+        per_image)
 
 
 def _o_gif_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {GIF_MOD} = 0)",
-    )
-    return f"""
-WITH img AS ({img}),
-bands AS (
-  SELECT b.band, CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM range(0, 3) AS b(band)
-),
-px AS (
-  SELECT i.image_id, i.w, i.h, b.band,
-    (gx.x + gy.y + i.i + b.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands b
-)
-SELECT image_id, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int) AS checksum,
+    return f"""{_o_pixel_ctes(0, [("gif", 3)])}
+SELECT image_id, cast(band as int) AS band, {_sql_checksum()} AS checksum,
   cast(min(val) as int) AS vmin, cast(max(val) as int) AS vmax,
   cast(least(256, w + h - 1) as int) AS n_colors
 FROM px GROUP BY image_id, band, w, h
 """
-
-
-PALETTED_MOD = 499
 
 
 def q_paletted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4028,27 +4027,10 @@ def q_paletted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity grayscale palette in each format, decodes back from the
     REAL bytes, and per-format checksums match the same closed
     form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 7)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vmin", T2.IntegerType()),
-            T2.StructField("vmax", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.gif import decode_gif, encode_gif
         from gdal_spark.raster.png import (
@@ -4058,58 +4040,35 @@ def q_paletted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gdal_spark.raster.tiff import decode_tiff_paletted, encode_tiff
 
         gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
+        idx = px[:, :, 0]
+        outs = {
+            "png": decode_png_paletted(
+                encode_png_paletted(idx, gray))[0],
+            "tiff": decode_tiff_paletted(
+                encode_tiff(idx, palette=gray))[0],
+            "gif": decode_gif(encode_gif(idx, gray))[0],
+        }
+        return [
+            {
+                "fmt": fmt,
+                "checksum": gdal_checksum(band),
+                "vmin": int(band.min()),
+                "vmax": int(band.max()),
+            }
+            for fmt, band in outs.items()
+        ]
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                idx = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                outs = {
-                    "png": decode_png_paletted(
-                        encode_png_paletted(idx, gray))[0],
-                    "tiff": decode_tiff_paletted(
-                        encode_tiff(idx, palette=gray))[0],
-                    "gif": decode_gif(encode_gif(idx, gray))[0],
-                }
-                for fmt, band in outs.items():
-                    rows.append(
-                        {
-                            "image_id": img_id,
-                            "fmt": fmt,
-                            "checksum": gdal_checksum(band),
-                            "vmin": int(band.min()),
-                            "vmax": int(band.max()),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 7,
+        "image_id string, fmt string, checksum int, vmin int, vmax int",
+        per_image)
 
 
 def _o_paletted_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD} = 7)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id, (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-),
-b0 AS (
-  SELECT image_id,
-    cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-      AS checksum,
-    cast(min(val) as int) AS vmin, cast(max(val) as int) AS vmax
-  FROM px GROUP BY image_id
-)
-SELECT b.image_id, f.fmt, b.checksum, b.vmin, b.vmax
-FROM b0 b CROSS JOIN (VALUES ('png'), ('tiff'), ('gif')) AS f(fmt)
+    return f"""{_o_pixel_ctes(7, [("png", 1), ("tiff", 1), ("gif", 1)])}
+SELECT image_id, fmt, {_sql_checksum()} AS checksum,
+  cast(min(val) as int) AS vmin, cast(max(val) as int) AS vmax
+FROM px GROUP BY image_id, fmt
 """
 
 
@@ -4119,91 +4078,30 @@ def q_flat_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     .hdr key=value + bsq/bil interleaves): the pixel rule encodes
     through REAL bytes of all four variants and the decoded per-band
     checksums match one closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 11)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.bmp import decode_bmp, encode_bmp
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.envi import decode_envi, encode_envi
 
         gray = np.arange(256, dtype=np.uint8)[:, None].repeat(3, 1)
+        outs = {}
+        outs["bmp24"] = decode_bmp(encode_bmp(px))
+        idx, pal = decode_bmp(encode_bmp(px[:, :, 0], palette=gray))
+        outs["bmp8"] = pal[idx][:, :, :1]
+        for il in ("bsq", "bil"):
+            raw, hdr = encode_envi(px, interleave=il)
+            outs[f"envi_{il}"] = decode_envi(raw, hdr)[0]
+        return band_checksum_rows(outs)
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["bmp24"] = decode_bmp(encode_bmp(arr))
-                idx, pal = decode_bmp(encode_bmp(arr[:, :, 0],
-                                                 palette=gray))
-                outs["bmp8"] = pal[idx][:, :, :1]
-                for il in ("bsq", "bil"):
-                    raw, hdr = encode_envi(arr, interleave=il)
-                    outs[f"envi_{il}"] = decode_envi(raw, hdr)[0]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 11, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_flat_raster_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 11)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('bmp24', 3), ('bmp8', 1),
-                        ('envi_bsq', 3), ('envi_bil', 3)) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(11, [("bmp24", 3), ("bmp8", 1),
+                                     ("envi_bsq", 3), ("envi_bil", 3)])
 
 
 def q_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4214,90 +4112,30 @@ def q_interlaced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlaced bytes, decodes back, and per-band checksums match the
     same closed form as the progressive-free layouts — interlacing is
     a pure reordering, so outputs must be bit-identical."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 109)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.gif import decode_gif_rgb, encode_gif_rgb
         from gdal_spark.raster.png import decode_png, encode_png
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["png_adam7"] = decode_png(
-                    encode_png(arr, interlace=True))
-                u16 = arr[:, :, 0].astype(np.uint16) * 257
-                outs["png16_adam7"] = (
-                    decode_png(encode_png(u16, interlace=True)) >> 8
-                ).astype(np.uint8)[:, :, None]
-                outs["gif_ilace"] = decode_gif_rgb(
-                    encode_gif_rgb(arr, interlace=True))
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        outs = {}
+        outs["png_adam7"] = decode_png(encode_png(px, interlace=True))
+        u16 = px[:, :, 0].astype(np.uint16) * 257
+        outs["png16_adam7"] = (
+            decode_png(encode_png(u16, interlace=True)) >> 8
+        ).astype(np.uint8)
+        outs["gif_ilace"] = decode_gif_rgb(
+            encode_gif_rgb(px, interlace=True))
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 109, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_interlaced_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 109)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('png_adam7', 3), ('png16_adam7', 1),
-                        ('gif_ilace', 3)) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(109, [("png_adam7", 3), ("png16_adam7", 1),
+                                      ("gif_ilace", 3)])
 
 
 def q_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4312,29 +4150,12 @@ def q_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full multi-scan script (10 scans color / 6 gray), and PSNR
     vs the original pixel rule >= 40 dB (the BASELINE.json lossy
     contract)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 113)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("variant", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("sof_marker", T2.IntegerType()),
-            T2.StructField("n_scans", T2.IntegerType()),
-            T2.StructField("diff_checksum", T2.IntegerType()),
-            T2.StructField("psnr_ok", T2.IntegerType()),
-        ]
-    )
+    def per_image(px, img):
+        import struct as _s
 
-    def run(batches):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.jpeg import (decode_jpeg, encode_jpeg,
                                             encode_jpeg_progressive)
@@ -4344,8 +4165,6 @@ def q_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
             return 1 if (mse == 0 or 10 * np.log10(255.0**2 / mse) >= 40.0) else 0
 
         def sof_marker(blob):
-            import struct as _s
-
             p = 2  # header segments all carry lengths until SOF
             while p < len(blob) - 1:
                 m = blob[p + 1]
@@ -4355,55 +4174,48 @@ def q_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 p += 2 + ln
             return -1
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                gray = arr[:, :, 0]
-                for variant, src, kw in (
-                    ("prog_rgb", arr, {}),
-                    ("prog_gray", gray, {"gray": True}),
-                ):
-                    blob = encode_jpeg_progressive(src, 95, **kw)
-                    prog = decode_jpeg(blob)
-                    base = decode_jpeg(encode_jpeg(src, 95, **kw))
-                    if prog.ndim == 2:
-                        prog = prog[:, :, None]
-                    if base.ndim == 2:
-                        base = base[:, :, None]
-                    ref = src if src.ndim == 3 else src[:, :, None]
-                    # markers never appear inside entropy data (0xFF is
-                    # zero-stuffed), so counting SOS bytes is exact
-                    n_scans = blob.count(b"\xff\xda")
-                    for b in range(prog.shape[2]):
-                        diff = (prog[:, :, b].astype(np.int32)
-                                - base[:, :, b].astype(np.int32))
-                        rows.append(
-                            {
-                                "image_id": img_id,
-                                "variant": variant,
-                                "band": b,
-                                "sof_marker": sof_marker(blob),
-                                "n_scans": n_scans,
-                                "diff_checksum": gdal_checksum(diff),
-                                "psnr_ok": psnr_ok(ref, prog),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        rows = []
+        gray = px[:, :, 0]
+        for variant, src, kw in (
+            ("prog_rgb", px, {}),
+            ("prog_gray", gray, {"gray": True}),
+        ):
+            blob = encode_jpeg_progressive(src, 95, **kw)
+            prog = decode_jpeg(blob)
+            base = decode_jpeg(encode_jpeg(src, 95, **kw))
+            if prog.ndim == 2:
+                prog = prog[:, :, None]
+            if base.ndim == 2:
+                base = base[:, :, None]
+            ref = src if src.ndim == 3 else src[:, :, None]
+            # markers never appear inside entropy data (0xFF is
+            # zero-stuffed), so counting SOS bytes is exact
+            n_scans = blob.count(b"\xff\xda")
+            for b in range(prog.shape[2]):
+                diff = (prog[:, :, b].astype(np.int32)
+                        - base[:, :, b].astype(np.int32))
+                rows.append(
+                    {
+                        "variant": variant,
+                        "band": b,
+                        "sof_marker": sof_marker(blob),
+                        "n_scans": n_scans,
+                        "diff_checksum": gdal_checksum(diff),
+                        "psnr_ok": psnr_ok(ref, prog),
+                    }
+                )
+        return rows
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 113,
+        "image_id string, variant string, band int, sof_marker int,"
+        " n_scans int, diff_checksum int, psnr_ok int",
+        per_image)
 
 
 def _o_progressive_jpeg() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 113)",
-    )
     return f"""
-WITH img AS ({img}),
+WITH img AS ({_o_images(113)}),
 variants AS (
   SELECT * FROM (VALUES ('prog_rgb', 3, 10), ('prog_gray', 1, 6))
     AS v(variant, nb, n_scans)
@@ -4459,11 +4271,7 @@ def _o_gdaltindex() -> str:
     from gdal_spark.fixtures.georef import RES0
     from gdal_spark.tiles.tilemath import sql_double
 
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 127)",
-    )
+    img = _o_images(127)
     return f"""
 WITH img AS ({img}),
 entries AS (
@@ -4502,61 +4310,36 @@ def q_retile(spark: SparkSession, sf_dir: str) -> DataFrame:
     :214).  Each output tile is checksummed in OUTPUT-LOCAL
     coordinates (band 0) — the same golden primitive every pixel
     oracle rides."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     TW = TH = 96
     OV = 16
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 131)
-    images = build_images(spark, ids_df=ids, with_payload=False)
-    schema = T2.StructType(
-        [
-            T2.StructField("i", T2.LongType()),
-            T2.StructField("level", T2.IntegerType()),
-            T2.StructField("row", T2.IntegerType()),
-            T2.StructField("col", T2.IntegerType()),
-            T2.StructField("tile_w", T2.IntegerType()),
-            T2.StructField("tile_h", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("vsum", T2.LongType()),
-        ]
-    )
 
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
         from gdal_spark.operators.retile import retile_image
         from gdal_spark.raster.checksum import gdal_checksum
 
-        for pdf in batches:
-            recs = []
-            for i, w, h in zip(pdf["i"], pdf["w"], pdf["h"]):
-                i, w, h = int(i), int(w), int(h)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                band0 = ((x + y + i) % 256).astype(np.uint8)
-                for lvl, row, col, _ox, _oy, cw, ch, tile in retile_image(
-                    band0, TW, TH, overlap=OV, levels=1
-                ):
-                    recs.append(
-                        {
-                            "i": i, "level": lvl, "row": row, "col": col,
-                            "tile_w": cw, "tile_h": ch,
-                            "checksum": gdal_checksum(tile),
-                            "vsum": int(tile.sum(dtype=np.int64)),
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=[f.name for f in schema.fields])
+        return [
+            {
+                "level": lvl, "row": row, "col": col,
+                "tile_w": cw, "tile_h": ch,
+                "checksum": gdal_checksum(tile),
+                "vsum": int(tile.sum(dtype=np.int64)),
+            }
+            for lvl, row, col, _ox, _oy, cw, ch, tile in retile_image(
+                px[:, :, 0], TW, TH, overlap=OV, levels=1
+            )
+        ]
 
-    return images.select("i", "w", "h").mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 131,
+        "i bigint, level int, row int, col int, tile_w int, tile_h int,"
+        " checksum int, vsum bigint",
+        per_image)
 
 
 def _o_retile() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 131)",
-    )
+    img = _o_images(131)
     # per-level mosaic dims; level-1 pixel = src(2X+1, 2Y+1), else 0
     return f"""
 WITH img AS ({img}),
@@ -4595,8 +4378,7 @@ px AS (
 SELECT i, cast(level as int) AS level, cast(row as int) AS row,
   cast(col as int) AS col, cast(tw as int) AS tile_w,
   cast(th as int) AS tile_h,
-  cast(sum(val % ({_PRIMES_SQL})[((y * tw + x) % 11) + 1]) % 65536 as int)
-    AS checksum,
+  {_sql_checksum("val", "y * tw + x")} AS checksum,
   cast(sum(val) as bigint) AS vsum
 FROM px
 GROUP BY i, level, row, col, tw, th
@@ -4879,116 +4661,62 @@ def q_mrf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never written ((0,0) idx records read back as fill, :2602-2607).
     Decoded checksums, tile counts, written-tile counts and the
     parsed BoundingBox all match closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     PX, PY = 48, 32
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 151)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h", "lon_c", "lat_c"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_tiles", T2.IntegerType()),
-            T2.StructField("n_written", T2.IntegerType()),
-            T2.StructField("x0_q6", T2.LongType()),
-        ]
-    )
 
-    def run(batches):
+    def per_image(px, img):
         import math as _math
 
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.mrf import (decode_mrf, encode_mrf,
                                            mrf_tile_entries)
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h, lon, lat in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["lon_c"], pdf["lat_c"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                rgb = np_image_pixels(i, w, h)
-                g = rgb[:, :, 0]
-                tx = np.arange(w) // PX
-                ty = np.arange(h) // PY
-                odd = ((tx[None, :] + ty[:, None]) % 2 == 1)
-                sparse = np.where(odd, g, 0).astype(np.uint8)
-                bbox = (float(lon), float(lat) - 1.0,
-                        float(lon) + 1.0, float(lat))
-                variants = {
-                    "mrf_png": (rgb, "PNG", None),
-                    "mrf_none": (g, "NONE", None),
-                    "mrf_deflate": (g, "DEFLATE", None),
-                    "mrf_lerc": (g, "LERC", None),
-                    "mrf_sparse": (sparse, "PNG", 0),
-                }
-                for fmt, (src, comp, skip) in variants.items():
-                    xml, idx, data = encode_mrf(
-                        src, page=(PX, PY), compression=comp,
-                        bbox=bbox, skip_uniform=skip)
-                    out, got_bbox = decode_mrf(xml, idx, data)
-                    ents = list(mrf_tile_entries(xml, idx))
-                    wrote = sum(1 for e in ents
-                                if (e[2], e[3]) != (0, 0))
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                                "n_tiles": len(ents),
-                                "n_written": wrote,
-                                "x0_q6": _math.floor(got_bbox[0] * 1e6),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        g = px[:, :, 0]
+        tx = np.arange(img.w) // PX
+        ty = np.arange(img.h) // PY
+        odd = ((tx[None, :] + ty[:, None]) % 2 == 1)
+        sparse = np.where(odd, g, 0).astype(np.uint8)
+        bbox = (img.lon_c, img.lat_c - 1.0, img.lon_c + 1.0, img.lat_c)
+        variants = {
+            "mrf_png": (px, "PNG", None),
+            "mrf_none": (g, "NONE", None),
+            "mrf_deflate": (g, "DEFLATE", None),
+            "mrf_lerc": (g, "LERC", None),
+            "mrf_sparse": (sparse, "PNG", 0),
+        }
+        rows = []
+        for fmt, (src, comp, skip) in variants.items():
+            xml, idx, data = encode_mrf(
+                src, page=(PX, PY), compression=comp,
+                bbox=bbox, skip_uniform=skip)
+            out, got_bbox = decode_mrf(xml, idx, data)
+            ents = list(mrf_tile_entries(xml, idx))
+            wrote = sum(1 for e in ents
+                        if (e[2], e[3]) != (0, 0))
+            rows += band_checksum_rows(
+                {fmt: out}, n_tiles=len(ents), n_written=wrote,
+                x0_q6=_math.floor(got_bbox[0] * 1e6))
+        return rows
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 151,
+        "image_id string, fmt string, band int, checksum int, n_tiles int,"
+        " n_written int, x0_q6 bigint",
+        per_image, cols=("lon_c", "lat_c"))
 
 
 def _o_mrf_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 151)",
-    )
-    return f"""
-WITH img AS ({img}),
+    return f"""{_o_pixel_ctes(
+        151,
+        [("mrf_png", 3), ("mrf_none", 1), ("mrf_deflate", 1),
+         ("mrf_lerc", 1), ("mrf_sparse", 1)],
+        val="CASE WHEN fmt = 'mrf_sparse'"
+            " AND ((x // 48) + (y // 32)) % 2 = 0 THEN 0 ELSE v END",
+    )},
 dims AS (
-  SELECT *,
-    (1 + (w - 1) // 48) AS pcx, (1 + (h - 1) // 32) AS pcy
+  SELECT i, (1 + (w - 1) // 48) AS pcx, (1 + (h - 1) // 32) AS pcy
   FROM img
-),
-fmts AS (
-  SELECT * FROM (VALUES ('mrf_png', 3), ('mrf_none', 1),
-                        ('mrf_deflate', 1), ('mrf_lerc', 1),
-                        ('mrf_sparse', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, f.nb, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, i.i, i.pcx, i.pcy, fb.fmt, fb.band,
-    CASE WHEN fb.fmt = 'mrf_sparse'
-          AND ((gx.x // 48) + (gy.y // 32)) % 2 = 0 THEN 0
-         ELSE (gx.x + gy.y + i.i + fb.phase) % 256 END AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM dims i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
 ),
 written AS (  -- sparse: odd-parity tiles only
   SELECT i.i,
@@ -5000,16 +4728,15 @@ written AS (  -- sparse: odd-parity tiles only
   GROUP BY i.i
 )
 SELECT p.image_id, p.fmt, cast(p.band as int) AS band,
-  cast(sum(p.val % ({_PRIMES_SQL})[(p.pidx % 11) + 1]) % 65536 as int)
-    AS checksum,
-  cast(p.pcx * p.pcy as int) AS n_tiles,
+  {_sql_checksum("p.val", "p.pidx")} AS checksum,
+  cast(d.pcx * d.pcy as int) AS n_tiles,
   CASE WHEN p.fmt = 'mrf_sparse' THEN w.n_odd
-       ELSE cast(p.pcx * p.pcy as int) END AS n_written,
-  cast(floor(d.lon_c * 1e6) as bigint) AS x0_q6
+       ELSE cast(d.pcx * d.pcy as int) END AS n_written,
+  cast(floor(p.lon_c * 1e6) as bigint) AS x0_q6
 FROM px p
 JOIN dims d ON d.i = p.i
 JOIN written w ON w.i = p.i
-GROUP BY p.image_id, p.i, p.fmt, p.band, p.pcx, p.pcy, w.n_odd, d.lon_c
+GROUP BY p.image_id, p.fmt, p.band, d.pcx, d.pcy, w.n_odd, p.lon_c
 """
 
 
@@ -5023,149 +4750,80 @@ def q_raw_fleet2(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max-coordinate geotransform).  The pixel rule rides through
     REAL bytes of each and the decoded checksums + parsed
     geotransform origins match one closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 139)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h", "lon_c", "lat_c"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("x0_q6", T2.LongType()),
-            T2.StructField("y0_q6", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import math as _math
 
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.rawformats import (
-            decode_gtx, decode_kro, decode_pnm, decode_snodas,
-            encode_gtx, encode_kro, encode_pnm, encode_snodas,
+            decode_gtx, decode_kro, decode_ngsgeoid, decode_pnm,
+            decode_sigdem, decode_snodas, encode_gtx, encode_kro,
+            encode_ngsgeoid, encode_pnm, encode_sigdem, encode_snodas,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h, lon, lat in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["lon_c"], pdf["lat_c"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                lon, lat = float(lon), float(lat)
-                rgb = np_image_pixels(i, w, h)
-                g = rgb[:, :, 0]
-                outs = {}
-                outs["pnm_gray"] = (decode_pnm(encode_pnm(g))[:, :, None]
-                                    .astype(np.int64), 0, 0)
-                outs["pnm_rgb"] = (decode_pnm(encode_pnm(rgb))
-                                   .astype(np.int64), 0, 0)
-                outs["pnm16"] = (
-                    decode_pnm(encode_pnm(g.astype(np.uint16) * 257))
-                    [:, :, None].astype(np.int64), 0, 0)
-                outs["kro_rgb"] = (decode_kro(encode_kro(rgb))
-                                   .astype(np.int64), 0, 0)
-                outs["kro_f32"] = (
-                    (decode_kro(encode_kro(
-                        g.astype(np.float32) + 0.25)) * 4)
-                    .astype(np.int64), 0, 0)
-                garr, ggt = decode_gtx(encode_gtx(
-                    g.astype(np.float32) + 0.5,
-                    ymin=lat, xmin=lon, dy=0.25, dx=0.5))
-                outs["gtx"] = ((garr[:, :, None] * 2).astype(np.int64),
-                               _math.floor(ggt[0] * 1e6),
-                               _math.floor(ggt[3] * 1e6))
-                sarr, sgt, _nd = decode_snodas(*encode_snodas(
-                    (g.astype(np.int16) + 100),
-                    minx=lon, miny=lat - h * 0.01,
-                    maxx=lon + w * 0.01, maxy=lat))
-                outs["snodas"] = (sarr[:, :, None].astype(np.int64),
-                                  _math.floor(sgt[0] * 1e6),
-                                  _math.floor(sgt[3] * 1e6))
-                from gdal_spark.raster.rawformats import (
-                    decode_ngsgeoid, decode_sigdem, encode_ngsgeoid,
-                    encode_sigdem,
-                )
+        i, w, h, lon, lat = img.i, img.w, img.h, img.lon_c, img.lat_c
+        g = px[:, :, 0]
+        outs = {}  # fmt -> (decoded integer array, geotransform)
+        outs["pnm_gray"] = (decode_pnm(encode_pnm(g)), None)
+        outs["pnm_rgb"] = (decode_pnm(encode_pnm(px)), None)
+        outs["pnm16"] = (
+            decode_pnm(encode_pnm(g.astype(np.uint16) * 257)), None)
+        outs["kro_rgb"] = (decode_kro(encode_kro(px)), None)
+        outs["kro_f32"] = (
+            (decode_kro(encode_kro(
+                g.astype(np.float32) + 0.25)) * 4)
+            .astype(np.int64), None)
+        garr, ggt = decode_gtx(encode_gtx(
+            g.astype(np.float32) + 0.5,
+            ymin=lat, xmin=lon, dy=0.25, dx=0.5))
+        outs["gtx"] = ((garr * 2).astype(np.int64), ggt)
+        sarr, sgt, _nd = decode_snodas(*encode_snodas(
+            (g.astype(np.int16) + 100),
+            minx=lon, miny=lat - h * 0.01,
+            maxx=lon + w * 0.01, maxy=lat))
+        outs["snodas"] = (sarr, sgt)
+        darr, dgt, _crs = decode_sigdem(encode_sigdem(
+            g.astype(np.float64), min_x=lon, max_y=lat,
+            x_dim=0.5, y_dim=0.5))
+        outs["sigdem"] = (np.floor(darr + 0.5).astype(np.int64), dgt)
+        # lat/2 keeps slat within the format's [-90, 90] gate
+        narr, ngt = decode_ngsgeoid(encode_ngsgeoid(
+            g.astype(np.float32) + 0.5,
+            slat=lat / 2 - h * 0.01, wlon=lon,
+            dlat=0.01, dlon=0.01,
+            little_endian=(i % 2 == 0)))
+        outs["ngsgeoid"] = ((narr * 2).astype(np.int64), ngt)
+        rows = []
+        for fmt, (out, gt) in outs.items():
+            x0, y0 = ((_math.floor(gt[0] * 1e6), _math.floor(gt[3] * 1e6))
+                      if gt else (0, 0))
+            rows += band_checksum_rows({fmt: out}, x0_q6=x0, y0_q6=y0)
+        return rows
 
-                darr, dgt, _crs = decode_sigdem(encode_sigdem(
-                    g.astype(np.float64), min_x=lon, max_y=lat,
-                    x_dim=0.5, y_dim=0.5))
-                outs["sigdem"] = (
-                    np.floor(darr + 0.5).astype(np.int64)[:, :, None],
-                    _math.floor(dgt[0] * 1e6),
-                    _math.floor(dgt[3] * 1e6))
-                # lat/2 keeps slat within the format's [-90, 90] gate
-                narr, ngt = decode_ngsgeoid(encode_ngsgeoid(
-                    g.astype(np.float32) + 0.5,
-                    slat=lat / 2 - h * 0.01, wlon=lon,
-                    dlat=0.01, dlon=0.01,
-                    little_endian=(i % 2 == 0)))
-                outs["ngsgeoid"] = (
-                    (narr[:, :, None] * 2).astype(np.int64),
-                    _math.floor(ngt[0] * 1e6),
-                    _math.floor(ngt[3] * 1e6))
-                for fmt, (out, x0, y0) in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                                "x0_q6": x0, "y0_q6": y0,
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 139,
+        "image_id string, fmt string, band int, checksum int, x0_q6 bigint,"
+        " y0_q6 bigint",
+        per_image, cols=("lon_c", "lat_c"))
 
 
 def _o_raw_fleet2() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 139)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES
-    ('pnm_gray', 1), ('pnm_rgb', 3), ('pnm16', 1),
-    ('kro_rgb', 3), ('kro_f32', 1), ('gtx', 1), ('snodas', 1),
-    ('sigdem', 1), ('ngsgeoid', 1)
-  ) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, i.i, i.w, i.h, i.lon_c, i.lat_c, fb.fmt, fb.band,
-    CASE fb.fmt
-      WHEN 'pnm16' THEN ((gx.x + gy.y + i.i) % 256) * 257
-      WHEN 'kro_f32' THEN ((gx.x + gy.y + i.i) % 256) * 4 + 1
-      WHEN 'gtx' THEN ((gx.x + gy.y + i.i) % 256) * 2 + 1
-      WHEN 'ngsgeoid' THEN ((gx.x + gy.y + i.i) % 256) * 2 + 1
-      WHEN 'snodas' THEN ((gx.x + gy.y + i.i) % 256) + 100
-      ELSE (gx.x + gy.y + i.i + fb.phase) % 256
-    END AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
+    from gdal_spark.tiles.tilemath import sql_double
+
+    # ngsgeoid mirrors decode_ngsgeoid's op order, slat + nlat * dlat
+    # - dlat / 2 with slat = lat/2 - h * dlat: in floats (a - b) + b
+    # need not equal a
+    dlat, half = sql_double(0.01), sql_double(0.01 / 2)
+    return f"""{_o_pixel_ctes(
+        139,
+        [("pnm_gray", 1), ("pnm_rgb", 3), ("pnm16", 1, 257),
+         ("kro_rgb", 3), ("kro_f32", 1, 4, 1), ("gtx", 1, 2, 1),
+         ("snodas", 1, 1, 100), ("sigdem", 1), ("ngsgeoid", 1, 2, 1)],
+    )}
 SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum,
+  {_sql_checksum()} AS checksum,
   CASE fmt
     WHEN 'gtx' THEN cast(floor((lon_c - 0.25) * 1e6) as bigint)
     WHEN 'snodas' THEN cast(floor(lon_c * 1e6) as bigint)
@@ -5177,7 +4835,8 @@ SELECT image_id, fmt, cast(band as int) AS band,
                          as bigint)
     WHEN 'snodas' THEN cast(floor(lat_c * 1e6) as bigint)
     WHEN 'sigdem' THEN cast(floor(lat_c * 1e6) as bigint)
-    WHEN 'ngsgeoid' THEN cast(floor((lat_c / 2 - 0.005) * 1e6) as bigint)
+    WHEN 'ngsgeoid' THEN cast(floor(
+      ((lat_c / 2 - h * {dlat}) + h * {dlat} - {half}) * 1e6) as bigint)
     ELSE 0 END AS y0_q6
 FROM px
 GROUP BY image_id, fmt, band, lon_c, lat_c, h
@@ -5193,24 +4852,8 @@ def q_raw_fleet3(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed 180/1800/... grids, little-endian float32).  Decoded
     checksums + parsed geotransform origins (including the JDEM
     second-snapping) match closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 167)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h", "lon_c", "lat_c"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("x0_q6", T2.LongType()),
-            T2.StructField("y0_q6", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import math as _math
 
         import numpy as np
@@ -5221,56 +4864,39 @@ def q_raw_fleet3(spark: SparkSession, sf_dir: str) -> DataFrame:
             decode_ace2, decode_jdem, encode_ace2, encode_jdem,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h, lon, lat in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"],
-                pdf["lon_c"], pdf["lat_c"]
-            ):
-                i = int(i)
-                jw, jh = min(int(w), 128), min(int(h), 128)
-                lon, lat = float(lon), float(lat)
-                g = np_image_pixels(i, jw, jh)[:, :, 0]
-                ll_lat = (lat + 85.0) / 2
-                ll_lon = (lon + 180.0) / 2
-                out, gt = decode_jdem(encode_jdem(
-                    g.astype(np.float64), ll_lat, ll_lon,
-                    ll_lat + jh * 0.001, ll_lon + jw * 0.001))
-                vals = np.floor(out.astype(np.float64) * 10 + 0.5)
-                rows.append(
-                    {
-                        "image_id": img_id, "fmt": "jdem",
-                        "checksum": gdal_checksum(vals.astype(np.int64)),
-                        "x0_q6": _math.floor(gt[0] * 1e6),
-                        "y0_q6": _math.floor(gt[3] * 1e6),
-                    }
-                )
-                x = np.arange(180, dtype=np.int64)[None, :]
-                y = np.arange(180, dtype=np.int64)[:, None]
-                a = (((x + y + i) % 256).astype(np.float32) + 0.25)
-                arr, agt = decode_ace2(encode_ace2(a), "30S120W_5M")
-                rows.append(
-                    {
-                        "image_id": img_id, "fmt": "ace2",
-                        "checksum": gdal_checksum(
-                            (arr * 4).astype(np.int64)),
-                        "x0_q6": _math.floor(agt[0] * 1e6),
-                        "y0_q6": _math.floor(agt[3] * 1e6),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        jw, jh = min(img.w, 128), min(img.h, 128)
+        g = px[:jh, :jw, 0]
+        ll_lat = (img.lat_c + 85.0) / 2
+        ll_lon = (img.lon_c + 180.0) / 2
+        out, gt = decode_jdem(encode_jdem(
+            g.astype(np.float64), ll_lat, ll_lon,
+            ll_lat + jh * 0.001, ll_lon + jw * 0.001))
+        vals = np.floor(out.astype(np.float64) * 10 + 0.5)
+        # ACE2 tiles are a fixed 180x180 grid of the band-0 rule
+        a = (np_image_pixels(img.i, 180, 180)[:, :, 0].astype(np.float32)
+             + 0.25)
+        arr, agt = decode_ace2(encode_ace2(a), "30S120W_5M")
+        return [
+            {
+                "fmt": fmt,
+                "checksum": gdal_checksum(band.astype(np.int64)),
+                "x0_q6": _math.floor(geo[0] * 1e6),
+                "y0_q6": _math.floor(geo[3] * 1e6),
+            }
+            for fmt, band, geo in (("jdem", vals, gt),
+                                   ("ace2", arr * 4, agt))
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 167,
+        "image_id string, fmt string, checksum int, x0_q6 bigint,"
+        " y0_q6 bigint",
+        per_image, cols=("lon_c", "lat_c"))
 
 
 def _o_raw_fleet3() -> str:
     from gdal_spark.tiles.tilemath import sql_double
 
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 167)",
-    )
     mm = sql_double(0.001)
     # JDEM angles snap to whole seconds; mirror the decode's exact
     # d + m/60 + s/3600 float op order
@@ -5279,36 +4905,22 @@ def _o_raw_fleet3() -> str:
         return (f"((({st}) // 3600) + ((({st}) // 60) % 60) / 60.0"
                 f" + (({st}) % 60) / 3600.0)")
 
-    ll_lon = "((i.lon_c + 180.0) / 2)"
-    ur_lat = f"((i.lat_c + 85.0) / 2 + least(i.h, 128) * {mm})"
+    ll_lon = "((lon_c + 180.0) / 2)"
+    ur_lat = f"((lat_c + 85.0) / 2 + least(h, 128) * {mm})"
     ace_y0 = sql_double(-30.0 + 180 * (5.0 / 60))
-    return f"""
-WITH img AS ({img}),
-jd AS (
-  SELECT i.image_id, 'jdem' AS fmt,
-    cast(sum((((gx.x + gy.y + i.i) % 256) * 10)
-      % ({_PRIMES_SQL})[((gy.y * least(i.w, 128) + gx.x) % 11) + 1])
-      % 65536 as int) AS checksum,
-    cast(floor({snapped(ll_lon)} * 1e6) as bigint) AS x0_q6,
-    cast(floor({snapped(ur_lat)} * 1e6) as bigint) AS y0_q6
-  FROM img i
-  JOIN range(0, 128) AS gx(x) ON gx.x < least(i.w, 128)
-  JOIN range(0, 128) AS gy(y) ON gy.y < least(i.h, 128)
-  GROUP BY i.image_id, i.i, i.w, i.h, i.lon_c, i.lat_c
-),
-ace AS (
-  SELECT i.image_id, 'ace2' AS fmt,
-    cast(sum((((gx.x + gy.y + i.i) % 256) * 4 + 1)
-      % ({_PRIMES_SQL})[((gy.y * 180 + gx.x) % 11) + 1]) % 65536 as int)
-      AS checksum,
-    cast(-120000000 as bigint) AS x0_q6,
-    cast(floor({ace_y0} * 1e6) as bigint) AS y0_q6
-  FROM img i
-  CROSS JOIN range(0, 180) AS gx(x)
-  CROSS JOIN range(0, 180) AS gy(y)
-  GROUP BY i.image_id, i.i
-)
-SELECT * FROM jd UNION ALL SELECT * FROM ace
+    # JDEM: 0.1-m text of the band-0 rule over a 128x128 crop; ACE2: a
+    # fixed 180x180 grid, quantized x4
+    return f"""{_o_pixel_ctes(
+        167, [("jdem", 1, 10), ("ace2", 1, 4, 1)],
+        w="CASE WHEN f.fmt = 'jdem' THEN least(i.w, 128) ELSE 180 END",
+        h="CASE WHEN f.fmt = 'jdem' THEN least(i.h, 128) ELSE 180 END",
+    )}
+SELECT image_id, fmt, {_sql_checksum()} AS checksum,
+  CASE fmt WHEN 'jdem' THEN cast(floor({snapped(ll_lon)} * 1e6) as bigint)
+    ELSE cast(-120000000 as bigint) END AS x0_q6,
+  CASE fmt WHEN 'jdem' THEN cast(floor({snapped(ur_lat)} * 1e6) as bigint)
+    ELSE cast(floor({ace_y0} * 1e6) as bigint) END AS y0_q6
+FROM px GROUP BY image_id, fmt, h, lon_c, lat_c
 """
 
 
@@ -5323,115 +4935,51 @@ def q_grib_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing (5.40, round 5: rides the from-scratch T.800 codec on a
     64x64 crop — EBCOT is a sequential bit-plane coder) — and the
     decoded per-band checksums all match one closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 13)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.grib import decode_grib2, encode_grib2
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["grib_u8"] = decode_grib2(encode_grib2(arr))[0]
-                b0 = arr[:, :, 0].astype(np.int64)
-                outs["grib_off"] = (
-                    decode_grib2(encode_grib2(b0 - 128))[0] + 128
-                )
-                ds = decode_grib2(encode_grib2(b0 / 10.0, dscale=1))[0]
-                outs["grib_ds1"] = np.floor(ds * 10.0 + 0.5).astype(
-                    np.int64
-                )
-                outs["grib_cpx"] = decode_grib2(
-                    encode_grib2(arr, packing="complex")
-                )[0]
-                outs["grib_sd2"] = decode_grib2(
-                    encode_grib2(b0 - 50, packing="complex_diff",
-                                 diff_order=2)
-                )[0] + 50
-                p16 = decode_grib2(encode_grib2(b0 * 257,
-                                                packing="png"))[0]
-                outs["grib_png16"] = p16 // 257
-                wc, hc = min(int(w), 64), min(int(h), 64)
-                c0 = np_image_pixels(int(i), wc, hc)[:, :, 0].astype(
-                    np.int64
-                )
-                j16 = decode_grib2(encode_grib2(c0 * 257,
-                                                packing="jpeg2000"))[0]
-                outs["grib_j2k"] = j16 // 257
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        outs = {}
+        outs["grib_u8"] = decode_grib2(encode_grib2(px))[0]
+        b0 = px[:, :, 0].astype(np.int64)
+        outs["grib_off"] = (
+            decode_grib2(encode_grib2(b0 - 128))[0] + 128
+        )
+        ds = decode_grib2(encode_grib2(b0 / 10.0, dscale=1))[0]
+        outs["grib_ds1"] = np.floor(ds * 10.0 + 0.5).astype(
+            np.int64
+        )
+        outs["grib_cpx"] = decode_grib2(
+            encode_grib2(px, packing="complex")
+        )[0]
+        outs["grib_sd2"] = decode_grib2(
+            encode_grib2(b0 - 50, packing="complex_diff",
+                         diff_order=2)
+        )[0] + 50
+        p16 = decode_grib2(encode_grib2(b0 * 257,
+                                        packing="png"))[0]
+        outs["grib_png16"] = p16 // 257
+        c0 = b0[:64, :64]
+        j16 = decode_grib2(encode_grib2(c0 * 257,
+                                        packing="jpeg2000"))[0]
+        outs["grib_j2k"] = j16 // 257
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 13, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_grib_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 13)",
+    # grib_j2k rides a 64x64 crop: checksummed in output-local pixels
+    crop = "CASE WHEN f.fmt = 'grib_j2k' THEN least(i.{0}, 64) ELSE i.{0} END"
+    return _o_variant_checksums(
+        13,
+        [("grib_u8", 3), ("grib_off", 1), ("grib_ds1", 1), ("grib_cpx", 3),
+         ("grib_sd2", 1), ("grib_png16", 1), ("grib_j2k", 1)],
+        w=crop.format("w"), h=crop.format("h"),
     )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('grib_u8', 3), ('grib_off', 1),
-                        ('grib_ds1', 1), ('grib_cpx', 3),
-                        ('grib_sd2', 1), ('grib_png16', 1),
-                        ('grib_j2k', 1))
-       AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * (CASE WHEN fb.fmt = 'grib_j2k' THEN least(i.w, 64)
-            ELSE i.w END) + gx.x AS pidx
-  FROM img i
-  CROSS JOIN bands fb
-  JOIN range(0, 512) AS gx(x)
-    ON gx.x < (CASE WHEN fb.fmt = 'grib_j2k' THEN least(i.w, 64)
-               ELSE i.w END)
-  JOIN range(0, 512) AS gy(y)
-    ON gy.y < (CASE WHEN fb.fmt = 'grib_j2k' THEN least(i.h, 64)
-               ELSE i.h END)
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
 
 
 def q_dted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5441,68 +4989,30 @@ def q_dted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums): the pixel rule (shifted -128 so roughly half the
     elevations exercise the sign bit) rides through REAL DTED bytes
     and the decoded checksums match the closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 19)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_negative", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.dted import decode_dted, encode_dted
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = np_image_pixels(int(i), int(w), int(h))[
-                    :, :, 0
-                ].astype(np.int64) - 128
-                out, _meta = decode_dted(encode_dted(elev, lat0=45, lon0=7))
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(out + 128),
-                        "n_negative": int((out < 0).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = px[:, :, 0].astype(np.int64) - 128
+        out, _meta = decode_dted(encode_dted(elev, lat0=45, lon0=7))
+        return [
+            {
+                "checksum": gdal_checksum(out + 128),
+                "n_negative": int((out < 0).sum()),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 19,
+        "image_id string, checksum int, n_negative int", per_image)
 
 
 def _o_dted_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 19)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
-SELECT image_id,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum,
+    return f"""{_o_pixel_ctes(19)}
+SELECT image_id, {_sql_checksum()} AS checksum,
   cast(sum(CASE WHEN val < 128 THEN 1 ELSE 0 END) as int) AS n_negative
 FROM px GROUP BY image_id
 """
@@ -5516,103 +5026,60 @@ def q_nitf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-interleaved (odd -> P), plus a 16-bit MONO encode of
     channel 0 scaled x257 — and ICORDS=G IGEOLO corner coordinates
     round-trip exactly on the integer-arcsecond lattice."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 67)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("imode", T2.StringType()),
-            T2.StructField("cks_r", T2.IntegerType()),
-            T2.StructField("cks_g", T2.IntegerType()),
-            T2.StructField("cks_b", T2.IntegerType()),
-            T2.StructField("cks_mono16", T2.IntegerType()),
-            T2.StructField("ul_lat_as", T2.LongType()),
-            T2.StructField("ul_lon_as", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.nitf import decode_nitf, encode_nitf
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                px = np_image_pixels(i, w, h).astype(np.uint8)
-                lat0 = ((i % 80) - 40) * 3600 + (i % 47)
-                lon0 = ((i % 160) - 80) * 3600 + (i % 53)
-                corners = (
-                    (lat0 + h, lon0),
-                    (lat0 + h, lon0 + w),
-                    (lat0, lon0 + w),
-                    (lat0, lon0),
-                )
-                imode = "B" if i % 2 == 0 else "P"
-                rgb, meta = decode_nitf(
-                    encode_nitf(px, imode=imode, corners_arcsec=corners)
-                )
-                m16 = (px[:, :, 0].astype(np.uint16)) * 257
-                mono, _ = decode_nitf(encode_nitf(m16))
-                ul = meta["corners_arcsec"][0]
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "imode": meta["imode"],
-                        "cks_r": gdal_checksum(rgb[:, :, 0]),
-                        "cks_g": gdal_checksum(rgb[:, :, 1]),
-                        "cks_b": gdal_checksum(rgb[:, :, 2]),
-                        "cks_mono16": gdal_checksum(mono[:, :, 0]),
-                        "ul_lat_as": ul[0],
-                        "ul_lon_as": ul[1],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i, w, h = img.i, img.w, img.h
+        lat0 = ((i % 80) - 40) * 3600 + (i % 47)
+        lon0 = ((i % 160) - 80) * 3600 + (i % 53)
+        corners = (
+            (lat0 + h, lon0),
+            (lat0 + h, lon0 + w),
+            (lat0, lon0 + w),
+            (lat0, lon0),
+        )
+        imode = "B" if i % 2 == 0 else "P"
+        rgb, meta = decode_nitf(
+            encode_nitf(px, imode=imode, corners_arcsec=corners)
+        )
+        m16 = (px[:, :, 0].astype(np.uint16)) * 257
+        mono, _ = decode_nitf(encode_nitf(m16))
+        ul = meta["corners_arcsec"][0]
+        return [
+            {
+                "imode": meta["imode"],
+                "cks_r": gdal_checksum(rgb[:, :, 0]),
+                "cks_g": gdal_checksum(rgb[:, :, 1]),
+                "cks_b": gdal_checksum(rgb[:, :, 2]),
+                "cks_mono16": gdal_checksum(mono[:, :, 0]),
+                "ul_lat_as": ul[0],
+                "ul_lon_as": ul[1],
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 67,
+        "image_id string, imode string, cks_r int, cks_g int, cks_b int,"
+        " cks_mono16 int, ul_lat_as bigint, ul_lon_as bigint",
+        per_image)
 
 
 def _o_nitf_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 67)",
-    )
-    cks = (
-        "cast(sum(CASE WHEN c.ph = {ph} THEN "
-        "((gx.x + gy.y + i.i + c.ph) % 256) % ({primes})"
-        "[((gy.y * i.w + gx.x) % 11) + 1] ELSE 0 END) % 65536 as int)"
-    )
-    m16 = (
-        "cast(sum(CASE WHEN c.ph = 0 THEN "
-        "(((gx.x + gy.y + i.i) % 256) * 257) % ({primes})"
-        "[((gy.y * i.w + gx.x) % 11) + 1] ELSE 0 END) % 65536 as int)"
-    )
-    return f"""
-WITH img AS ({img})
-SELECT i.image_id,
-  CASE WHEN i.i % 2 = 0 THEN 'B' ELSE 'P' END AS imode,
-  {cks.format(ph=0, primes=_PRIMES_SQL)} AS cks_r,
-  {cks.format(ph=85, primes=_PRIMES_SQL)} AS cks_g,
-  {cks.format(ph=170, primes=_PRIMES_SQL)} AS cks_b,
-  {m16.format(primes=_PRIMES_SQL)} AS cks_mono16,
-  cast(((i.i % 80) - 40) * 3600 + (i.i % 47) + i.h as bigint) AS ul_lat_as,
-  cast(((i.i % 160) - 80) * 3600 + (i.i % 53) as bigint) AS ul_lon_as
-FROM img i
-JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-CROSS JOIN (VALUES (0), (85), (170)) AS c(ph)
-GROUP BY i.image_id, i.i, i.h
+    # bands 1 and 2 are band 0 shifted by their phase, mod 256
+    return f"""{_o_pixel_ctes(67)}
+SELECT image_id,
+  CASE WHEN i % 2 = 0 THEN 'B' ELSE 'P' END AS imode,
+  {_sql_checksum()} AS cks_r,
+  {_sql_checksum("(val + 85) % 256")} AS cks_g,
+  {_sql_checksum("(val + 170) % 256")} AS cks_b,
+  {_sql_checksum("val * 257")} AS cks_mono16,
+  cast(((i % 80) - 40) * 3600 + (i % 47) + h as bigint) AS ul_lat_as,
+  cast(((i % 160) - 80) * 3600 + (i % 53) as bigint) AS ul_lon_as
+FROM px GROUP BY image_id, i, h
 """
 
 
@@ -5624,82 +5091,44 @@ def q_pcidsk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     small integers) ride through REAL .pix bytes in BOTH
     interleavings (i even -> BAND, odd -> PIXEL with 512-padded
     scanlines); checksums/sums match the closed forms."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 71)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("ilv", T2.StringType()),
-            T2.StructField("cks_8u", T2.IntegerType()),
-            T2.StructField("sum_16s", T2.LongType()),
-            T2.StructField("sum_32r", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.pcidsk import decode_pcidsk, encode_pcidsk
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                px = np_image_pixels(i, w, h).astype(np.int64)
-                chans = [
-                    px[:, :, 0].astype(np.uint8),
-                    (px[:, :, 1] * 100 - 12800).astype(np.int16),
-                    (px[:, :, 2] * 3).astype(np.float32),
-                ]
-                ilv = "BAND" if i % 2 == 0 else "PIXEL"
-                out, meta = decode_pcidsk(encode_pcidsk(chans, ilv))
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "ilv": meta["interleaving"],
-                        "cks_8u": int(gdal_checksum(out[0])),
-                        "sum_16s": int(out[1].astype(np.int64).sum()),
-                        "sum_32r": int(out[2].astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        v = px.astype(np.int64)
+        chans = [
+            v[:, :, 0].astype(np.uint8),
+            (v[:, :, 1] * 100 - 12800).astype(np.int16),
+            (v[:, :, 2] * 3).astype(np.float32),
+        ]
+        ilv = "BAND" if img.i % 2 == 0 else "PIXEL"
+        out, meta = decode_pcidsk(encode_pcidsk(chans, ilv))
+        return [
+            {
+                "ilv": meta["interleaving"],
+                "cks_8u": int(gdal_checksum(out[0])),
+                "sum_16s": int(out[1].astype(np.int64).sum()),
+                "sum_32r": int(out[2].astype(np.int64).sum()),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 71,
+        "image_id string, ilv string, cks_8u int, sum_16s bigint,"
+        " sum_32r bigint",
+        per_image)
 
 
 def _o_pcidsk_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 71)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id, i.i,
-    (gx.x + gy.y + i.i) % 256 AS v0,
-    (gx.x + gy.y + i.i + 85) % 256 AS v1,
-    (gx.x + gy.y + i.i + 170) % 256 AS v2,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
+    return f"""{_o_pixel_ctes(71)}
 SELECT image_id,
   CASE WHEN any_value(i) % 2 = 0 THEN 'BAND' ELSE 'PIXEL' END AS ilv,
-  cast(sum(v0 % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS cks_8u,
-  cast(sum(v1 * 100 - 12800) as bigint) AS sum_16s,
-  cast(sum(v2 * 3) as bigint) AS sum_32r
+  {_sql_checksum()} AS cks_8u,
+  cast(sum(((val + 85) % 256) * 100 - 12800) as bigint) AS sum_16s,
+  cast(sum(((val + 170) % 256) * 3) as bigint) AS sum_32r
 FROM px GROUP BY image_id
 """
 
@@ -5711,80 +5140,42 @@ def q_hdf4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact small integers — grouped by NDG records, written
     big-endian, decoded back through the DD-chain walker; checksums
     and sums close exactly."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 73)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("n_datasets", T2.IntegerType()),
-            T2.StructField("cks_8u", T2.IntegerType()),
-            T2.StructField("sum_16s", T2.LongType()),
-            T2.StructField("sum_f64", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.hdf4 import decode_hdf4, encode_hdf4
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                i, w, h = int(i), int(w), int(h)
-                px = np_image_pixels(i, w, h).astype(np.int64)
-                sets = [
-                    px[:, :, 0].astype(np.uint8),
-                    (px[:, :, 1] * 100 - 12800).astype(np.int16),
-                    (px[:, :, 2] * 7).astype(np.float64),
-                ]
-                out, meta = decode_hdf4(encode_hdf4(sets))
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "n_datasets": len(out),
-                        "cks_8u": int(gdal_checksum(out[0])),
-                        "sum_16s": int(out[1].astype(np.int64).sum()),
-                        "sum_f64": int(out[2].astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        v = px.astype(np.int64)
+        sets = [
+            v[:, :, 0].astype(np.uint8),
+            (v[:, :, 1] * 100 - 12800).astype(np.int16),
+            (v[:, :, 2] * 7).astype(np.float64),
+        ]
+        out, meta = decode_hdf4(encode_hdf4(sets))
+        return [
+            {
+                "n_datasets": len(out),
+                "cks_8u": int(gdal_checksum(out[0])),
+                "sum_16s": int(out[1].astype(np.int64).sum()),
+                "sum_f64": int(out[2].astype(np.int64).sum()),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 73,
+        "image_id string, n_datasets int, cks_8u int, sum_16s bigint,"
+        " sum_f64 bigint",
+        per_image)
 
 
 def _o_hdf4_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 73)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS v0,
-    (gx.x + gy.y + i.i + 85) % 256 AS v1,
-    (gx.x + gy.y + i.i + 170) % 256 AS v2,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
+    return f"""{_o_pixel_ctes(73)}
 SELECT image_id, 3 AS n_datasets,
-  cast(sum(v0 % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS cks_8u,
-  cast(sum(v1 * 100 - 12800) as bigint) AS sum_16s,
-  cast(sum(v2 * 7) as bigint) AS sum_f64
+  {_sql_checksum()} AS cks_8u,
+  cast(sum(((val + 85) % 256) * 100 - 12800) as bigint) AS sum_16s,
+  cast(sum(((val + 170) % 256) * 7) as bigint) AS sum_f64
 FROM px GROUP BY image_id
 """
 
@@ -5796,73 +5187,35 @@ def q_usgsdem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shifted -128 to exercise negative elevations and token fusing)
     rides through REAL new-format bytes; decoded checksums match the
     closed form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 23)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("n_negative", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.usgsdem import (
             decode_usgsdem,
             encode_usgsdem,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = np_image_pixels(int(i), int(w), int(h))[
-                    :, :, 0
-                ].astype(np.int64) - 128
-                out, _meta = decode_usgsdem(
-                    encode_usgsdem(elev, lon0_deg=-100.0, lat0_deg=40.0)
-                )
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(out + 128),
-                        "n_negative": int((out < 0).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = px[:, :, 0].astype(np.int64) - 128
+        out, _meta = decode_usgsdem(
+            encode_usgsdem(elev, lon0_deg=-100.0, lat0_deg=40.0)
+        )
+        return [
+            {
+                "checksum": gdal_checksum(out + 128),
+                "n_negative": int((out < 0).sum()),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 23,
+        "image_id string, checksum int, n_negative int", per_image)
 
 
 def _o_usgsdem_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 23)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
-SELECT image_id,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum,
+    return f"""{_o_pixel_ctes(23)}
+SELECT image_id, {_sql_checksum()} AS checksum,
   cast(sum(CASE WHEN val < 128 THEN 1 ELSE 0 END) as int) AS n_negative
 FROM px GROUP BY image_id
 """
@@ -5874,95 +5227,36 @@ def q_pds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, SCALING_FACTOR/OFFSET): the pixel rule rides through
     REAL PDS3 bytes as 3-band uint8, signed MSB int16 (-128 shift),
     and a scaled variant (x0.5+16, quantized x2 — exact dyadics)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 29)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.pds import decode_pds, encode_pds
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                outs = {}
-                outs["pds_u8"] = decode_pds(encode_pds(arr))[0]
-                b0 = arr[:, :, 0].astype(np.int16) - 128
-                outs["pds_i16"] = (
-                    decode_pds(encode_pds(b0))[0].astype(np.int64) + 128
-                )
-                sc = decode_pds(
-                    encode_pds(b0, scale=0.5, offset=16.0)
-                )[0]
-                outs["pds_scaled"] = np.floor(sc * 2.0).astype(
-                    np.int64
-                ) + 128
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        outs = {}
+        outs["pds_u8"] = decode_pds(encode_pds(px))[0]
+        b0 = px[:, :, 0].astype(np.int16) - 128
+        outs["pds_i16"] = (
+            decode_pds(encode_pds(b0))[0].astype(np.int64) + 128
+        )
+        sc = decode_pds(
+            encode_pds(b0, scale=0.5, offset=16.0)
+        )[0]
+        outs["pds_scaled"] = np.floor(sc * 2.0).astype(
+            np.int64
+        ) + 128
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 29, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_pds_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 29)",
-    )
     # pds_scaled: floor(((v-128)*0.5 + 16) * 2) + 128 = v + 32 exactly
     # (dyadic halves), so all three variants share the pixel rule with
     # a NON-NEGATIVE integer shift (no %-sign divergence)
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('pds_u8', 3, 0), ('pds_i16', 1, 0),
-                        ('pds_scaled', 1, 32)) AS f(fmt, nb, shift)
-),
-bands AS (
-  SELECT f.fmt, f.shift, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 + fb.shift AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(29, [("pds_u8", 3), ("pds_i16", 1),
+                                     ("pds_scaled", 1, 1, 32)])
 
 
 def q_idrisi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5970,97 +5264,36 @@ def q_idrisi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows + 12-char-key .rdc doc file; byte/integer/real/rgb24 with
     pixel-interleaved BGR): the pixel rule rides through REAL
     (.rst bytes, .rdc text) pairs in all four data types."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 31)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.idrisi import decode_rst, encode_rst
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["rst_byte"] = decode_rst(*encode_rst(b0))[0][
-                    :, :, None
-                ]
-                i16 = b0.astype(np.int16) - 128
-                outs["rst_integer"] = (
-                    decode_rst(*encode_rst(i16))[0].astype(np.int64)
-                    + 128
-                )[:, :, None]
-                f32 = (b0.astype(np.float32) / 4.0)
-                dec = decode_rst(*encode_rst(f32))[0]
-                outs["rst_real"] = np.floor(
-                    dec.astype(np.float64) * 4.0
-                ).astype(np.int64)[:, :, None]
-                outs["rst_rgb24"] = decode_rst(*encode_rst(arr))[0]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = px[:, :, 0]
+        outs = {}
+        outs["rst_byte"] = decode_rst(*encode_rst(b0))[0]
+        i16 = b0.astype(np.int16) - 128
+        outs["rst_integer"] = (
+            decode_rst(*encode_rst(i16))[0].astype(np.int64)
+            + 128
+        )
+        f32 = (b0.astype(np.float32) / 4.0)
+        dec = decode_rst(*encode_rst(f32))[0]
+        outs["rst_real"] = np.floor(
+            dec.astype(np.float64) * 4.0
+        ).astype(np.int64)
+        outs["rst_rgb24"] = decode_rst(*encode_rst(px))[0]
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 31, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_idrisi_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 31)",
-    )
     # rst_real: v/4 is exact in float32 (dyadic), floor(x*4) recovers v
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('rst_byte', 1), ('rst_integer', 1),
-                        ('rst_real', 1), ('rst_rgb24', 3)) AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(31, [("rst_byte", 1), ("rst_integer", 1),
+                                     ("rst_real", 1), ("rst_rgb24", 3)])
 
 
 def q_misc_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6071,27 +5304,11 @@ def q_misc_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width text): the pixel rule rides through REAL bytes of
     all six variants and the decoded checksums match one closed
     form."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 37)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.fits import decode_fits, encode_fits
         from gdal_spark.raster.simplegrids import (
             decode_gsag,
@@ -6103,78 +5320,29 @@ def q_misc_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from gdal_spark.raster.tga import decode_tga, encode_tga
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["tga24"] = decode_tga(encode_tga(arr))
-                outs["tga_rle"] = decode_tga(
-                    encode_tga(arr, rle=True, top_left=False)
-                )
-                i16 = b0.astype(np.int16) - 128
-                outs["fits16"] = (
-                    decode_fits(encode_fits(i16))[0].astype(np.int64)
-                    + 128
-                )[:, :, None]
-                outs["gsbg"] = decode_gsbg(encode_gsbg(b0))[0].astype(
-                    np.int64
-                )[:, :, None]
-                outs["gsag"] = decode_gsag(encode_gsag(b0))[0].astype(
-                    np.int64
-                )[:, :, None]
-                outs["zmap"] = decode_zmap(encode_zmap(b0))[0].astype(
-                    np.int64
-                )[:, :, None]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = px[:, :, 0]
+        outs = {}
+        outs["tga24"] = decode_tga(encode_tga(px))
+        outs["tga_rle"] = decode_tga(
+            encode_tga(px, rle=True, top_left=False)
+        )
+        i16 = b0.astype(np.int16) - 128
+        outs["fits16"] = (
+            decode_fits(encode_fits(i16))[0].astype(np.int64)
+            + 128
+        )
+        outs["gsbg"] = decode_gsbg(encode_gsbg(b0))[0].astype(np.int64)
+        outs["gsag"] = decode_gsag(encode_gsag(b0))[0].astype(np.int64)
+        outs["zmap"] = decode_zmap(encode_zmap(b0))[0].astype(np.int64)
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 37, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_misc_raster_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 37)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('tga24', 3), ('tga_rle', 3), ('fits16', 1),
-                        ('gsbg', 1), ('gsag', 1), ('zmap', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(
+        37, [("tga24", 3), ("tga_rle", 3), ("fits16", 1),
+             ("gsbg", 1), ("gsag", 1), ("zmap", 1)])
 
 
 def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6182,61 +5350,20 @@ def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     zeroed extreme bins, cum[i] = total + hist[i]/2, LUT =
     (cum*256)/nTotal clamped — all integer divisions): per-image
     equalized checksums plus the LUT midpoint."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 41)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
-        import pandas as pd  # noqa: F811
-
-        from gdal_spark.fixtures.georef import np_image_pixels
+    def per_image(px, img):
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.enhance import equalize_u8
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                b0 = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                eq = equalize_u8(b0)
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(eq),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        eq = equalize_u8(px[:, :, 0])
+        return [{"checksum": gdal_checksum(eq)}]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 41, "image_id string, checksum int", per_image)
 
 
 def _o_equalize() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 41)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-),
+    return f"""{_o_pixel_ctes(41)},
 hist AS (
   SELECT image_id, val, count(*) AS c FROM px GROUP BY 1, 2
 ),
@@ -6258,9 +5385,7 @@ lut AS (
     least(255, greatest(0, cast((ch * 256) // total as bigint))) AS o
   FROM cum
 )
-SELECT p.image_id,
-  cast(sum(l.o % ({_PRIMES_SQL})[(p.pidx % 11) + 1]) % 65536 as int)
-    AS checksum
+SELECT p.image_id, {_sql_checksum("l.o", "p.pidx")} AS checksum
 FROM px p JOIN lut l ON l.image_id = p.image_id AND l.val = p.val
 GROUP BY p.image_id
 """
@@ -6271,57 +5396,31 @@ def q_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     LCG-seeded parameters (raster/augment.py): output-local checksums
     of the transformed pixel rule match the pure coordinate-mapping
     oracle."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 43)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("out_w", T2.IntegerType()),
-            T2.StructField("out_h", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
-        from gdal_spark.fixtures.georef import np_image_pixels
+    def per_image(px, img):
         from gdal_spark.raster.augment import (
             augment_image,
             augment_params,
         )
         from gdal_spark.raster.checksum import gdal_checksum
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                b0 = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                p = augment_params(int(i), int(w), int(h))
-                out = augment_image(b0, p)
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "out_w": out.shape[1],
-                        "out_h": out.shape[0],
-                        "checksum": gdal_checksum(out),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        p = augment_params(img.i, img.w, img.h)
+        out = augment_image(px[:, :, 0], p)
+        return [
+            {
+                "out_w": out.shape[1],
+                "out_h": out.shape[0],
+                "checksum": gdal_checksum(out),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 43,
+        "image_id string, out_w int, out_h int, checksum int", per_image)
 
 
 def _o_augment() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 43)",
-    )
+    img = _o_images(43)
     a, c, m = 1103515245, 12345, 1 << 31
     return f"""
 WITH img AS ({img}),
@@ -6359,8 +5458,7 @@ vals AS (
   FROM opx
 )
 SELECT image_id, cast(ow as int) AS out_w, cast(oh as int) AS out_h,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
+  {_sql_checksum()} AS checksum
 FROM vals GROUP BY image_id, ow, oh
 """
 
@@ -6370,70 +5468,29 @@ def q_hf2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta-compressed tiles with per-row 1/2/4-byte word sizes,
     georef-extents extended-header block; HFZ = gzip): the pixel rule
     (-128 shift) rides through REAL bytes both raw and gzipped."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 47)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.hf2 import decode_hf2, encode_hf2
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = np_image_pixels(int(i), int(w), int(h))[
-                    :, :, 0
-                ].astype(np.int64) - 128
-                for fmt, gz in (("hf2", False), ("hfz", True)):
-                    out, _m = decode_hf2(encode_hf2(elev, gz=gz))
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": gdal_checksum(out + 128),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = px[:, :, 0].astype(np.int64) - 128
+        rows = []
+        for fmt, gz in (("hf2", False), ("hfz", True)):
+            out, _m = decode_hf2(encode_hf2(elev, gz=gz))
+            rows.append({"fmt": fmt, "checksum": gdal_checksum(out + 128)})
+        return rows
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 47, "image_id string, fmt string, checksum int",
+        per_image)
 
 
 def _o_hf2_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 47)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
-SELECT image_id, f.fmt,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px CROSS JOIN (VALUES ('hf2'), ('hfz')) AS f(fmt)
-GROUP BY image_id, f.fmt
+    return f"""{_o_pixel_ctes(47, [("hf2", 1), ("hfz", 1)])}
+SELECT image_id, fmt, {_sql_checksum()} AS checksum
+FROM px GROUP BY image_id, fmt
 """
 
 
@@ -6443,79 +5500,37 @@ def q_terragen_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCAL*(base + v*hs/65536) fixed-point physical heights): the
     pixel rule (-128) rides through REAL TER bytes; raw checksums +
     the scale/offset metadata contract."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 53)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("offset_q", T2.LongType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.terragen import (
             decode_terragen,
             encode_terragen,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                elev = (
-                    np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                    .astype(np.int16) - 128
-                )
-                bh = int(i) % 100
-                out, meta = decode_terragen(
-                    encode_terragen(elev, height_scale=2,
-                                    base_height=bh)
-                )
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "checksum": gdal_checksum(
-                            out.astype(np.int64) + 128
-                        ),
-                        # offset = SCAL * baseHeight = 30 * (i % 100)
-                        "offset_q": int(np.floor(meta["offset"])),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        elev = px[:, :, 0].astype(np.int16) - 128
+        out, meta = decode_terragen(
+            encode_terragen(elev, height_scale=2,
+                            base_height=img.i % 100)
+        )
+        return [
+            {
+                "checksum": gdal_checksum(out.astype(np.int64) + 128),
+                # offset = SCAL * baseHeight = 30 * (i % 100)
+                "offset_q": int(np.floor(meta["offset"])),
+            }
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 53, "image_id string, checksum int, offset_q bigint",
+        per_image)
 
 
 def _o_terragen_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 53)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id, i.i,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
-SELECT image_id,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum,
+    return f"""{_o_pixel_ctes(53)}
+SELECT image_id, {_sql_checksum()} AS checksum,
   cast(30 * (i % 100) as bigint) AS offset_q
 FROM px GROUP BY image_id, i
 """
@@ -6528,27 +5543,11 @@ def q_hdr_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PAux (frmts/raw/pauxdataset: ChanDefinition offsets, mixed
     types, Swapped=LE): the pixel rule rides through REAL
     (header, raw) pairs in ten variants."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 59)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.hdrpairs import (
             decode_ehdr,
             decode_ers,
@@ -6562,96 +5561,48 @@ def q_hdr_raster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_saga,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["ers_u8"] = decode_ers(*encode_ers(arr))[0]
-                i16 = b0.astype(np.int16) - 128
-                outs["ers_i16"] = (
-                    decode_ers(*encode_ers(i16))[0].astype(np.int64)
-                    + 128
-                )
-                outs["ilwis_byte"] = decode_ilwis(*encode_ilwis(b0))[
-                    0
-                ][:, :, None]
-                outs["ilwis_int"] = (
-                    decode_ilwis(
-                        *encode_ilwis(b0.astype(np.int32) - 128)
-                    )[0].astype(np.int64) + 128
-                )[:, :, None]
-                outs["ehdr_u8"] = decode_ehdr(*encode_ehdr(arr))[0]
-                outs["ehdr_i16"] = (
-                    decode_ehdr(*encode_ehdr(i16))[0].astype(np.int64)
-                    + 128
-                )
-                outs["saga_byte"] = decode_saga(
-                    *encode_saga(b0)
-                )[0][:, :, None]
-                outs["saga_f32"] = decode_saga(
-                    *encode_saga(b0.astype(np.float32))
-                )[0].astype(np.int64)[:, :, None]
-                px = decode_paux(
-                    *encode_paux([arr[:, :, b] for b in range(3)])
-                )
-                outs["paux_u8"] = np.stack(px, axis=2)
-                outs["paux_i16"] = (
-                    decode_paux(*encode_paux([i16]))[0]
-                    .astype(np.int64) + 128
-                )[:, :, None]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        b0 = px[:, :, 0]
+        outs = {}
+        outs["ers_u8"] = decode_ers(*encode_ers(px))[0]
+        i16 = b0.astype(np.int16) - 128
+        outs["ers_i16"] = (
+            decode_ers(*encode_ers(i16))[0].astype(np.int64)
+            + 128
+        )
+        outs["ilwis_byte"] = decode_ilwis(*encode_ilwis(b0))[0]
+        outs["ilwis_int"] = (
+            decode_ilwis(
+                *encode_ilwis(b0.astype(np.int32) - 128)
+            )[0].astype(np.int64) + 128
+        )
+        outs["ehdr_u8"] = decode_ehdr(*encode_ehdr(px))[0]
+        outs["ehdr_i16"] = (
+            decode_ehdr(*encode_ehdr(i16))[0].astype(np.int64)
+            + 128
+        )
+        outs["saga_byte"] = decode_saga(*encode_saga(b0))[0]
+        outs["saga_f32"] = decode_saga(
+            *encode_saga(b0.astype(np.float32))
+        )[0].astype(np.int64)
+        bands = decode_paux(
+            *encode_paux([px[:, :, b] for b in range(3)])
+        )
+        outs["paux_u8"] = np.stack(bands, axis=2)
+        outs["paux_i16"] = (
+            decode_paux(*encode_paux([i16]))[0]
+            .astype(np.int64) + 128
+        )
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 59, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_hdr_raster_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 59)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('ers_u8', 3), ('ers_i16', 1),
-                        ('ilwis_byte', 1), ('ilwis_int', 1),
-                        ('ehdr_u8', 3), ('ehdr_i16', 1),
-                        ('saga_byte', 1), ('saga_f32', 1),
-                        ('paux_u8', 3), ('paux_i16', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(
+        59, [("ers_u8", 3), ("ers_i16", 1), ("ilwis_byte", 1),
+             ("ilwis_int", 1), ("ehdr_u8", 3), ("ehdr_i16", 1),
+             ("saga_byte", 1), ("saga_f32", 1), ("paux_u8", 3),
+             ("paux_i16", 1)])
 
 
 def q_gxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6660,84 +5611,41 @@ def q_gxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     LL_RIGHT stores rows BOTTOM-TO-TOP): the pixel rule rides through
     real GXF text in all four row-organized senses plus the #DUMMY
     nodata path (dummies read back and zeroed before checksumming)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 101)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.gxf import decode_gxf, encode_gxf
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                b0 = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                outs = {}
-                for fmt, sense in (("gxf_s1", 1), ("gxf_sm2", -2),
-                                   ("gxf_s3", 3)):
-                    out, _ = decode_gxf(encode_gxf(b0, sense=sense))
-                    outs[fmt] = out.astype(np.int64)
-                dm = b0.astype(np.float64)
-                dm[b0 == 7] = -1.0
-                out, meta = decode_gxf(encode_gxf(dm, dummy=-1.0))
-                out[out == meta["dummy"]] = 0.0
-                outs["gxf_dummy"] = out.astype(np.int64)
-                for fmt, out in outs.items():
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": gdal_checksum(out),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        b0 = px[:, :, 0]
+        outs = {}
+        for fmt, sense in (("gxf_s1", 1), ("gxf_sm2", -2),
+                           ("gxf_s3", 3)):
+            out, _ = decode_gxf(encode_gxf(b0, sense=sense))
+            outs[fmt] = out.astype(np.int64)
+        dm = b0.astype(np.float64)
+        dm[b0 == 7] = -1.0
+        out, meta = decode_gxf(encode_gxf(dm, dummy=-1.0))
+        out[out == meta["dummy"]] = 0.0
+        outs["gxf_dummy"] = out.astype(np.int64)
+        return [
+            {"fmt": fmt, "checksum": gdal_checksum(out)}
+            for fmt, out in outs.items()
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 101, "image_id string, fmt string, checksum int",
+        per_image)
 
 
 def _o_gxf_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 101)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('gxf_s1'), ('gxf_sm2'), ('gxf_s3'),
-                        ('gxf_dummy')) AS f(fmt)
-),
-px AS (
-  SELECT i.image_id, f.fmt,
-    CASE WHEN f.fmt = 'gxf_dummy'
-         AND (gx.x + gy.y + i.i) % 256 = 7 THEN 0
-         ELSE (gx.x + gy.y + i.i) % 256 END AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN fmts f
-)
-SELECT image_id, fmt,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
+    return f"""{_o_pixel_ctes(
+        101,
+        [("gxf_s1", 1), ("gxf_sm2", 1), ("gxf_s3", 1), ("gxf_dummy", 1)],
+        val="CASE WHEN fmt = 'gxf_dummy' AND v = 7 THEN 0 ELSE v END",
+    )}
+SELECT image_id, fmt, {_sql_checksum()} AS checksum
 FROM px GROUP BY image_id, fmt
 """
 
@@ -6754,129 +5662,86 @@ def q_gtiff_industrial(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts — every combo decoding to the exact original band.
     Windows crop to 120x112 (pure-Python LZW keeps the sweep
     cheap)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 107)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.tiff import decode_tiff, encode_tiff_ext
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                wc, hc = min(int(w), 120), min(int(h), 112)
-                arr = np_image_pixels(int(i), wc, hc)
-                b0 = arr[:, :, 0].copy()
-                combos = {
-                    # fmt -> (encoded array, kwargs, invert fn)
-                    "u8_lzw_p2_rgb": (
-                        arr, dict(compression="lzw", predictor=2),
-                        lambda o: o[:, :, 0].astype(np.int64)),
-                    "u16_deflate_p2_mm": (
-                        (b0.astype(np.uint16) * 257),
-                        dict(compression="deflate", predictor=2,
-                             big_endian=True, rows_per_strip=16),
-                        lambda o: o.astype(np.int64) // 257),
-                    "i16_lzw_mm": (
-                        (b0.astype(np.int16) - 128),
-                        dict(compression="lzw", big_endian=True),
-                        lambda o: o.astype(np.int64) + 128),
-                    "i8_packbits": (
-                        (b0.astype(np.int16) - 128).astype(np.int8),
-                        dict(compression="packbits",
-                             rows_per_strip=16),
-                        lambda o: o.astype(np.int64) + 128),
-                    "u32_none_bigtiff_mm": (
-                        (b0.astype(np.uint32) * 16843009),
-                        dict(bigtiff=True, big_endian=True),
-                        lambda o: o.astype(np.int64) // 16843009),
-                    "i32_deflate_p2": (
-                        (b0.astype(np.int32) - 1000000),
-                        dict(compression="deflate", predictor=2,
-                             rows_per_strip=16),
-                        lambda o: o.astype(np.int64) + 1000000),
-                    "f32_deflate_p3": (
-                        b0.astype(np.float32),
-                        dict(compression="deflate", predictor=3),
-                        lambda o: o.astype(np.int64)),
-                    "f64_lzw_p3_bigtiff": (
-                        (b0.astype(np.float64) - 0.5),
-                        dict(compression="lzw", predictor=3,
-                             bigtiff=True, rows_per_strip=16),
-                        lambda o: (o + 0.5).astype(np.int64)),
-                    # tiled layout (§15): grid does not divide
-                    # 120x112, so edge tiles exercise the padding
-                    "u8_tiled_lzw_p2_rgb": (
-                        arr, dict(compression="lzw", predictor=2,
-                                  tile=(64, 48)),
-                        lambda o: o[:, :, 0].astype(np.int64)),
-                    "f32_tiled_deflate_p3_mm": (
-                        b0.astype(np.float32),
-                        dict(compression="deflate", predictor=3,
-                             big_endian=True, tile=(48, 32)),
-                        lambda o: o.astype(np.int64)),
-                }
-                for fmt, (enc_arr, kw, invert) in combos.items():
-                    out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": gdal_checksum(invert(out)),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        arr = np.ascontiguousarray(px[:112, :120])
+        b0 = arr[:, :, 0].copy()
+        combos = {
+            # fmt -> (encoded array, kwargs, invert fn)
+            "u8_lzw_p2_rgb": (
+                arr, dict(compression="lzw", predictor=2),
+                lambda o: o[:, :, 0].astype(np.int64)),
+            "u16_deflate_p2_mm": (
+                (b0.astype(np.uint16) * 257),
+                dict(compression="deflate", predictor=2,
+                     big_endian=True, rows_per_strip=16),
+                lambda o: o.astype(np.int64) // 257),
+            "i16_lzw_mm": (
+                (b0.astype(np.int16) - 128),
+                dict(compression="lzw", big_endian=True),
+                lambda o: o.astype(np.int64) + 128),
+            "i8_packbits": (
+                (b0.astype(np.int16) - 128).astype(np.int8),
+                dict(compression="packbits",
+                     rows_per_strip=16),
+                lambda o: o.astype(np.int64) + 128),
+            "u32_none_bigtiff_mm": (
+                (b0.astype(np.uint32) * 16843009),
+                dict(bigtiff=True, big_endian=True),
+                lambda o: o.astype(np.int64) // 16843009),
+            "i32_deflate_p2": (
+                (b0.astype(np.int32) - 1000000),
+                dict(compression="deflate", predictor=2,
+                     rows_per_strip=16),
+                lambda o: o.astype(np.int64) + 1000000),
+            "f32_deflate_p3": (
+                b0.astype(np.float32),
+                dict(compression="deflate", predictor=3),
+                lambda o: o.astype(np.int64)),
+            "f64_lzw_p3_bigtiff": (
+                (b0.astype(np.float64) - 0.5),
+                dict(compression="lzw", predictor=3,
+                     bigtiff=True, rows_per_strip=16),
+                lambda o: (o + 0.5).astype(np.int64)),
+            # tiled layout (§15): grid does not divide
+            # 120x112, so edge tiles exercise the padding
+            "u8_tiled_lzw_p2_rgb": (
+                arr, dict(compression="lzw", predictor=2,
+                          tile=(64, 48)),
+                lambda o: o[:, :, 0].astype(np.int64)),
+            "f32_tiled_deflate_p3_mm": (
+                b0.astype(np.float32),
+                dict(compression="deflate", predictor=3,
+                     big_endian=True, tile=(48, 32)),
+                lambda o: o.astype(np.int64)),
+        }
+        return [
+            {
+                "fmt": fmt,
+                "checksum": gdal_checksum(
+                    invert(decode_tiff(encode_tiff_ext(enc_arr, **kw)))),
+            }
+            for fmt, (enc_arr, kw, invert) in combos.items()
+        ]
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 107, "image_id string, fmt string, checksum int",
+        per_image)
 
 
 def _o_gtiff_industrial() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 107)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('u8_lzw_p2_rgb'), ('u16_deflate_p2_mm'),
-                        ('i16_lzw_mm'), ('i8_packbits'),
-                        ('u32_none_bigtiff_mm'), ('i32_deflate_p2'),
-                        ('f32_deflate_p3'), ('f64_lzw_p3_bigtiff'),
-                        ('u8_tiled_lzw_p2_rgb'),
-                        ('f32_tiled_deflate_p3_mm'))
-    AS f(fmt)
-),
-px AS (
-  SELECT i.image_id, f.fmt,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * least(i.w, 120) + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 120) AS gx(x) ON gx.x < least(i.w, 120)
-  JOIN range(0, 112) AS gy(y) ON gy.y < least(i.h, 112)
-  CROSS JOIN fmts f
-)
-SELECT image_id, fmt,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
+    fmts = ("u8_lzw_p2_rgb", "u16_deflate_p2_mm", "i16_lzw_mm",
+            "i8_packbits", "u32_none_bigtiff_mm", "i32_deflate_p2",
+            "f32_deflate_p3", "f64_lzw_p3_bigtiff", "u8_tiled_lzw_p2_rgb",
+            "f32_tiled_deflate_p3_mm")
+    return f"""{_o_pixel_ctes(107, [(f, 1) for f in fmts],
+                              w="least(i.w, 120)", h="least(i.h, 112)")}
+SELECT image_id, fmt, {_sql_checksum()} AS checksum
 FROM px GROUP BY image_id, fmt
 """
 
@@ -6893,26 +5758,10 @@ def q_gtiff_codec_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the closed-form original (the codec's documented
     contract; content is the smooth triangle transform of the pixel
     rule so quality-90 quantization has ~12 dB of margin)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 211)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("checksum", T2.IntegerType()),
-            T2.StructField("psnr_ok", T2.BooleanType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.checksum import gdal_checksum
         from gdal_spark.raster.tiff import decode_tiff, encode_tiff_ext
 
@@ -6921,75 +5770,57 @@ def q_gtiff_codec_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (a.astype(np.float64) - b.astype(np.float64)) ** 2)
             return 10 * np.log10(255.0 ** 2 / max(mse, 1e-12))
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                wc, hc = min(int(w), 120), min(int(h), 112)
-                arr = np_image_pixels(int(i), wc, hc)
-                # smooth triangle content for the lossy rows: slope
-                # <= 1/px everywhere, no 255->0 wrap edges
-                xg = np.arange(wc, dtype=np.int64)
-                yg = np.arange(hc, dtype=np.int64)[:, None]
-                tri = np.abs(((xg + yg + int(i)) % 510) - 255).astype(
-                    np.uint8)
-                tri_rgb = np.stack(
-                    [np.abs(((xg + yg + int(i) + p) % 510) - 255)
-                     for p in (0, 85, 170)], axis=-1).astype(np.uint8)
-                rgba = np.dstack(
-                    [arr, ((xg + yg + int(i) + 51) % 256).astype(
-                        np.uint8)])
-                for fmt, enc_arr, kw in (
-                    ("webp_strips",
-                     arr, dict(compression="webp", rows_per_strip=16)),
-                    ("webp_tiled_mm",
-                     arr, dict(compression="webp", tile=(48, 32),
-                               bigtiff=True, big_endian=True)),
-                    ("webp_rgba_tiled",
-                     rgba, dict(compression="webp", tile=(64, 48))),
-                    ("jpeg_rgb_tiled",
-                     tri_rgb, dict(compression="jpeg", tile=(48, 32))),
-                    ("jpeg_gray_strips",
-                     tri, dict(compression="jpeg", rows_per_strip=32)),
-                ):
-                    out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
-                    lossy = kw["compression"] == "jpeg"
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt,
-                            "checksum": -1 if lossy else gdal_checksum(
-                                out[:, :, 0].astype(np.int64)),
-                            "psnr_ok": bool(psnr(out, enc_arr) >= 45.0),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
+        i = img.i
+        arr = np.ascontiguousarray(px[:112, :120])
+        hc, wc = arr.shape[:2]
+        # smooth triangle content for the lossy rows: slope
+        # <= 1/px everywhere, no 255->0 wrap edges
+        xg = np.arange(wc, dtype=np.int64)
+        yg = np.arange(hc, dtype=np.int64)[:, None]
+        tri = np.abs(((xg + yg + i) % 510) - 255).astype(
+            np.uint8)
+        tri_rgb = np.stack(
+            [np.abs(((xg + yg + i + p) % 510) - 255)
+             for p in (0, 85, 170)], axis=-1).astype(np.uint8)
+        rgba = np.dstack(
+            [arr, ((xg + yg + i + 51) % 256).astype(
+                np.uint8)])
+        rows = []
+        for fmt, enc_arr, kw in (
+            ("webp_strips",
+             arr, dict(compression="webp", rows_per_strip=16)),
+            ("webp_tiled_mm",
+             arr, dict(compression="webp", tile=(48, 32),
+                       bigtiff=True, big_endian=True)),
+            ("webp_rgba_tiled",
+             rgba, dict(compression="webp", tile=(64, 48))),
+            ("jpeg_rgb_tiled",
+             tri_rgb, dict(compression="jpeg", tile=(48, 32))),
+            ("jpeg_gray_strips",
+             tri, dict(compression="jpeg", rows_per_strip=32)),
+        ):
+            out = decode_tiff(encode_tiff_ext(enc_arr, **kw))
+            lossy = kw["compression"] == "jpeg"
+            rows.append(
+                {
+                    "fmt": fmt,
+                    "checksum": -1 if lossy else gdal_checksum(
+                        out[:, :, 0].astype(np.int64)),
+                    "psnr_ok": bool(psnr(out, enc_arr) >= 45.0),
+                }
             )
+        return rows
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 211,
+        "image_id string, fmt string, checksum int, psnr_ok boolean",
+        per_image)
 
 
 def _o_gtiff_codec_chunks() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 211)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    (gx.x + gy.y + i.i) % 256 AS val,
-    gy.y * least(i.w, 120) + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 120) AS gx(x) ON gx.x < least(i.w, 120)
-  JOIN range(0, 112) AS gy(y) ON gy.y < least(i.h, 112)
-),
+    return f"""{_o_pixel_ctes(211, w="least(i.w, 120)", h="least(i.h, 112)")},
 exact AS (
-  SELECT image_id,
-    cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-      AS checksum
+  SELECT image_id, {_sql_checksum()} AS checksum
   FROM px GROUP BY image_id
 )
 SELECT e.image_id, f.fmt,
@@ -7011,27 +5842,11 @@ def q_jp2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions.  Windows are cropped to 96x96 (EBCOT is a sequential
     bit-plane coder; the crop keeps the oracle sweep cheap while
     still covering multi-block grids at 2 DWT levels)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 103)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.jp2 import (
             decode_j2k,
             decode_jp2,
@@ -7039,81 +5854,31 @@ def q_jp2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_jp2,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                wc, hc = min(int(w), 96), min(int(h), 96)
-                arr = np_image_pixels(int(i), wc, hc)
-                b0 = arr[:, :, 0]
-                rgb = decode_jp2(encode_jp2(arr, levels=2))
-                for b in range(3):
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": "jp2_rgb",
-                            "band": b,
-                            "checksum": gdal_checksum(rgb[:, :, b]),
-                        }
-                    )
-                outs = {
-                    "j2k_gray": decode_j2k(encode_j2k(b0, levels=2)),
-                    "j2k_cb16": decode_j2k(
-                        encode_j2k(b0, levels=2, cb_exp=4)
-                    ),
-                    "j2k_i16": decode_j2k(
-                        encode_j2k(
-                            (b0.astype(np.int16) * 37).astype(np.int16),
-                            levels=2,
-                        )
-                    ).astype(np.int64),
-                }
-                for fmt, out in outs.items():
-                    rows.append(
-                        {
-                            "image_id": img_id, "fmt": fmt, "band": 0,
-                            "checksum": gdal_checksum(out),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        arr = np.ascontiguousarray(px[:96, :96])
+        b0 = arr[:, :, 0]
+        outs = {
+            "jp2_rgb": decode_jp2(encode_jp2(arr, levels=2)),
+            "j2k_gray": decode_j2k(encode_j2k(b0, levels=2)),
+            "j2k_cb16": decode_j2k(
+                encode_j2k(b0, levels=2, cb_exp=4)
+            ),
+            "j2k_i16": decode_j2k(
+                encode_j2k(
+                    (b0.astype(np.int16) * 37).astype(np.int16),
+                    levels=2,
+                )
+            ).astype(np.int64),
+        }
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 103, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_jp2_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 103)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('jp2_rgb', 3, 1), ('j2k_gray', 1, 1),
-                        ('j2k_cb16', 1, 1), ('j2k_i16', 1, 37))
-    AS f(fmt, nb, mult)
-),
-bands AS (
-  SELECT f.fmt, f.mult, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    ((gx.x + gy.y + i.i + fb.phase) % 256) * fb.mult AS val,
-    gy.y * least(i.w, 96) + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 96) AS gx(x) ON gx.x < least(i.w, 96)
-  JOIN range(0, 96) AS gy(y) ON gy.y < least(i.h, 96)
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(
+        103, [("jp2_rgb", 3), ("j2k_gray", 1), ("j2k_cb16", 1),
+              ("j2k_i16", 1, 37)],
+        w="least(i.w, 96)", h="least(i.h, 96)")
 
 
 def q_isis3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7122,97 +5887,35 @@ def q_isis3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Multiplier metadata): the pixel rule rides through REAL .cub
     bytes as 3-band u8 BSQ, int16 in a non-dividing tile grid
     (exercises edge-tile padding), and Real float32."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 79)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.isis3 import decode_isis3, encode_isis3
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["isis3_bsq"] = decode_isis3(encode_isis3(arr))[0]
-                outs["isis3_tile"] = (
-                    decode_isis3(
-                        encode_isis3(
-                            b0.astype(np.int16) - 128,
-                            fmt="Tile", tile=(48, 40),
-                        )
-                    )[0].astype(np.int64) + 128
+        b0 = px[:, :, 0]
+        outs = {}
+        outs["isis3_bsq"] = decode_isis3(encode_isis3(px))[0]
+        outs["isis3_tile"] = (
+            decode_isis3(
+                encode_isis3(
+                    b0.astype(np.int16) - 128,
+                    fmt="Tile", tile=(48, 40),
                 )
-                outs["isis3_real"] = decode_isis3(
-                    encode_isis3(b0.astype(np.float32))
-                )[0].astype(np.int64)
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+            )[0].astype(np.int64) + 128
+        )
+        outs["isis3_real"] = decode_isis3(
+            encode_isis3(b0.astype(np.float32))
+        )[0].astype(np.int64)
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 79, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_isis3_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 79)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('isis3_bsq', 3), ('isis3_tile', 1),
-                        ('isis3_real', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  SELECT i.image_id, fb.fmt, fb.band,
-    (gx.x + gy.y + i.i + fb.phase) % 256 AS val,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    return _o_variant_checksums(79, [("isis3_bsq", 3), ("isis3_tile", 1),
+                                     ("isis3_real", 1)])
 
 
 def q_lan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7221,104 +5924,41 @@ def q_lan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-bit two-pixels-per-byte packing): the pixel rule rides through
     REAL .lan bytes as 3-band u8 (big AND little endian), int16, and
     the 4-bit nibble path (values v//16, width cropped even)."""
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 89)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("fmt", T2.StringType()),
-            T2.StructField("band", T2.IntegerType()),
-            T2.StructField("checksum", T2.IntegerType()),
-        ]
-    )
-
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
-        from gdal_spark.raster.checksum import gdal_checksum
+        from gdal_spark.raster.checksum import band_checksum_rows
         from gdal_spark.raster.lan import decode_lan, encode_lan
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                arr = np_image_pixels(int(i), int(w), int(h))
-                b0 = arr[:, :, 0]
-                outs = {}
-                outs["lan_u8"] = decode_lan(encode_lan(arr))[0]
-                outs["lan_u8_be"] = decode_lan(
-                    encode_lan(arr, big_endian=True)
-                )[0]
-                outs["lan_i16"] = (
-                    decode_lan(
-                        encode_lan(b0.astype(np.int16) - 128)
-                    )[0].astype(np.int64) + 128
-                )
-                we = (int(w) // 2) * 2
-                outs["lan_4bit"] = decode_lan(
-                    encode_lan((b0[:, :we] >> 4), four_bit=True)
-                )[0]
-                for fmt, out in outs.items():
-                    for b in range(out.shape[2]):
-                        rows.append(
-                            {
-                                "image_id": img_id, "fmt": fmt,
-                                "band": b,
-                                "checksum": gdal_checksum(out[:, :, b]),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+        b0 = px[:, :, 0]
+        outs = {}
+        outs["lan_u8"] = decode_lan(encode_lan(px))[0]
+        outs["lan_u8_be"] = decode_lan(
+            encode_lan(px, big_endian=True)
+        )[0]
+        outs["lan_i16"] = (
+            decode_lan(
+                encode_lan(b0.astype(np.int16) - 128)
+            )[0].astype(np.int64) + 128
+        )
+        we = (img.w // 2) * 2
+        outs["lan_4bit"] = decode_lan(
+            encode_lan((b0[:, :we] >> 4), four_bit=True)
+        )[0]
+        return band_checksum_rows(outs)
 
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(spark, sf_dir, 89, FMT_BAND_CHECKSUM, per_image)
 
 
 def _o_lan_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 89)",
-    )
-    return f"""
-WITH img AS ({img}),
-fmts AS (
-  SELECT * FROM (VALUES ('lan_u8', 3), ('lan_u8_be', 3),
-                        ('lan_i16', 1), ('lan_4bit', 1))
-    AS f(fmt, nb)
-),
-bands AS (
-  SELECT f.fmt, b.band,
-    CASE b.band WHEN 0 THEN 0 WHEN 1 THEN 85 ELSE 170 END AS phase
-  FROM fmts f JOIN range(0, 3) AS b(band) ON b.band < f.nb
-),
-px AS (
-  -- the 4-bit variant crops to even width: its checksum prime index
-  -- runs in OUTPUT-LOCAL coordinates (y * cropped_w + x)
-  SELECT i.image_id, fb.fmt, fb.band,
-    CASE WHEN fb.fmt = 'lan_4bit'
-         THEN ((gx.x + gy.y + i.i) % 256) // 16
-         ELSE (gx.x + gy.y + i.i + fb.phase) % 256 END AS val,
-    gy.y * (CASE WHEN fb.fmt = 'lan_4bit' THEN (i.w // 2) * 2
-            ELSE i.w END) + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-  CROSS JOIN bands fb
-  WHERE fb.fmt <> 'lan_4bit' OR gx.x < (i.w // 2) * 2
-)
-SELECT image_id, fmt, cast(band as int) AS band,
-  cast(sum(val % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS checksum
-FROM px GROUP BY image_id, fmt, band
-"""
+    # the 4-bit variant crops to even width: its checksum prime index
+    # runs in OUTPUT-LOCAL coordinates (y * cropped_w + x)
+    return _o_variant_checksums(
+        89, [("lan_u8", 3), ("lan_u8_be", 3), ("lan_i16", 1),
+             ("lan_4bit", 1)],
+        val="CASE WHEN fmt = 'lan_4bit' THEN v // 16 ELSE v END",
+        w="CASE WHEN f.fmt = 'lan_4bit' THEN (i.w // 2) * 2 ELSE i.w END")
 
 
 def q_bsb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7328,80 +5968,40 @@ def q_bsb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the pixel rule (1 + v % 127, 7-bit color size) ride through
     REAL .kap bytes with TRUE runs; checksums over both the decoded
     indices and the palette-expanded red channel."""
-    import pandas as pd
-    from pyspark.sql import types as T2
+    import numpy as np
 
-    ids = _image_ids(spark, sf_dir).where(F.col("i") % PALETTED_MOD == 61)
-    geo = build_images(spark, ids_df=ids, with_payload=False).select(
-        "i", "image_id", "w", "h"
-    )
-    schema = T2.StructType(
-        [
-            T2.StructField("image_id", T2.StringType()),
-            T2.StructField("idx_checksum", T2.IntegerType()),
-            T2.StructField("red_checksum", T2.IntegerType()),
-        ]
-    )
+    pal = [((3 * i) % 256, (5 * i) % 256, (7 * i) % 256)
+           for i in range(1, 128)]
+    red = np.zeros(128, dtype=np.int64)
+    for i, (r, _g, _b) in enumerate(pal, start=1):
+        red[i] = r
 
-    def run(batches):
+    def per_image(px, img):
         import numpy as np
 
-        from gdal_spark.fixtures.georef import np_image_pixels
         from gdal_spark.raster.bsb import decode_bsb, encode_bsb
         from gdal_spark.raster.checksum import gdal_checksum
 
-        pal = [((3 * i) % 256, (5 * i) % 256, (7 * i) % 256)
-               for i in range(1, 128)]
-        red = np.zeros(128, dtype=np.int64)
-        for i, (r, _g, _b) in enumerate(pal, start=1):
-            red[i] = r
+        idx = (1 + (px[:, :, 0].astype(np.int64) % 127)).astype(np.uint8)
+        out, pback, _m = decode_bsb(encode_bsb(idx, pal))
+        assert pback == pal
+        return [
+            {
+                "idx_checksum": gdal_checksum(out.astype(np.int64)),
+                "red_checksum": gdal_checksum(red[out.astype(np.int64)]),
+            }
+        ]
 
-        for pdf in batches:
-            rows = []
-            for i, img_id, w, h in zip(
-                pdf["i"], pdf["image_id"], pdf["w"], pdf["h"]
-            ):
-                v = np_image_pixels(int(i), int(w), int(h))[:, :, 0]
-                idx = (1 + (v.astype(np.int64) % 127)).astype(np.uint8)
-                out, pback, _m = decode_bsb(encode_bsb(idx, pal))
-                assert pback == pal
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "idx_checksum": gdal_checksum(
-                            out.astype(np.int64)
-                        ),
-                        "red_checksum": gdal_checksum(
-                            red[out.astype(np.int64)]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return geo.mapInPandas(run, schema)
+    return _pixel_rule_query(
+        spark, sf_dir, 61,
+        "image_id string, idx_checksum int, red_checksum int", per_image)
 
 
 def _o_bsb_roundtrip() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 61)",
-    )
-    return f"""
-WITH img AS ({img}),
-px AS (
-  SELECT i.image_id,
-    1 + ((gx.x + gy.y + i.i) % 256) % 127 AS idx,
-    gy.y * i.w + gx.x AS pidx
-  FROM img i
-  JOIN range(0, 512) AS gx(x) ON gx.x < i.w
-  JOIN range(0, 512) AS gy(y) ON gy.y < i.h
-)
-SELECT image_id,
-  cast(sum(idx % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536 as int)
-    AS idx_checksum,
-  cast(sum(((3 * idx) % 256) % ({_PRIMES_SQL})[(pidx % 11) + 1]) % 65536
-    as int) AS red_checksum
+    idx = "1 + val % 127"
+    return f"""{_o_pixel_ctes(61)}
+SELECT image_id, {_sql_checksum(idx)} AS idx_checksum,
+  {_sql_checksum(f"(3 * ({idx})) % 256")} AS red_checksum
 FROM px GROUP BY image_id
 """
 
@@ -11114,11 +9714,7 @@ def q_raster_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o_raster_update() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 137)",
-    )
+    img = _o_images(137)
     return f"""
 WITH img AS ({img}),
 px AS (
@@ -12436,7 +11032,7 @@ cells AS (
   WHERE gy.y < g.h AND gx.x < g.w),
 cs AS (
   SELECT j, w, h, cell,
-         cast(sum(val % ({_PRIMES_SQL_V})[((y * w + x) % 11) + 1])
+         cast(sum(val % ({_PRIMES_SQL})[((y * w + x) % 11) + 1])
               % 65536 as int) AS csum
   FROM cells GROUP BY j, w, h, cell)
 SELECT j, cast(w as int) AS w, cast(h as int) AS h,
@@ -12527,14 +11123,11 @@ cells AS (
 SELECT j, cast(f as int) AS frame_idx, cast(w as int) AS w,
        cast(h as int) AS h,
        cast(sum(CASE WHEN c = 0 THEN val
-                     % ({_PRIMES_SQL_V})[((y * w + x) % 11) + 1]
+                     % ({_PRIMES_SQL})[((y * w + x) % 11) + 1]
                      ELSE 0 END) % 65536 as int) AS checksum,
        cast(sum(val) as bigint) AS px_sum
 FROM cells GROUP BY j, f, w, h
 """
-
-
-_PRIMES_SQL_V = "[7,11,13,17,19,23,29,31,37,41,43]"
 
 
 MJPEG_MOD = 11
@@ -12705,7 +11298,7 @@ cells AS (
 SELECT j, cast(f as int) AS frame_idx, cast(w as int) AS w,
        cast(h as int) AS h,
        cast(sum(CASE WHEN c = 0 THEN val
-                     % ({_PRIMES_SQL_V})[((y * w + x) % 11) + 1]
+                     % ({_PRIMES_SQL})[((y * w + x) % 11) + 1]
                      ELSE 0 END) % 65536 as int) AS checksum,
        cast(sum(val) as bigint) AS px_sum
 FROM cells GROUP BY j, f, w, h
@@ -14486,9 +13079,6 @@ FROM vals GROUP BY 1, 2
 """
 
 
-_PRIMES_SQL = "[7,11,13,17,19,23,29,31,37,41,43]"
-
-
 def _render_win_ctes(extra_filter: str = "", winner: str = "max_by") -> str:
     """Shared CTEs: image subset -> covering zoom-12 tiles -> per-dst-
     pixel source index (nearest) -> last-writer composite `win`
@@ -15778,11 +14368,7 @@ FROM geod GROUP BY 1
 
 
 def _o_rat() -> str:
-    img = georef.sql_images_cte(
-        "o_orderkey",
-        f"(SELECT o_orderkey FROM orders WHERE o_orderkey % {PALETTED_MOD}"
-        " = 7)",
-    )
+    img = _o_images(7)
     # residue counting: #{x<w: x%256=xt} = (w-xt+255)//256, same for y
     # against t = (v - i - xt) mod 256 (band-0 rule (x+y+i) % 256)
     t = "(((v.v - im.i - xt.x) % 256 + 256) % 256)"

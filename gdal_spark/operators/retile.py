@@ -35,8 +35,18 @@ __all__ = ["tile_counts", "tile_grid", "level_size", "level_pixels",
            "retile_image", "retile_grid_df"]
 
 
+def _check_overlap(tile: int, overlap: int) -> None:
+    # gdal_retile steps by tile - overlap: 0 divides by zero, less
+    # than 0 walks the offsets backwards
+    if not 0 <= overlap < tile:
+        raise ValueError(
+            f"retile: overlap must be >= 0 and < tile size "
+            f"(overlap={overlap}, tile={tile})")
+
+
 def tile_counts(size: int, tile: int, overlap: int = 0) -> int:
     """gdal_retile.py:92-103 verbatim rule."""
+    _check_overlap(tile, overlap)
     if size <= tile:
         return 1
     step = tile - overlap
@@ -92,6 +102,8 @@ def retile_grid_df(images: DataFrame, tw: int, th: int,
                    overlap: int = 0) -> DataFrame:
     """Distributed tile-grid catalog (no pixels): one row per output
     tile with its source window — pure Column math, zero shuffle."""
+    _check_overlap(tw, overlap)
+    _check_overlap(th, overlap)
     step_x, step_y = tw - overlap, th - overlap
     cx = F.when(
         F.col("w") > tw,

@@ -54,3 +54,14 @@ def gdal_checksum_image(arr: np.ndarray) -> list[int]:
     if arr.ndim == 2:
         return [gdal_checksum(arr)]
     return [gdal_checksum(arr[:, :, b]) for b in range(arr.shape[2])]
+
+
+def band_checksum_rows(outs: dict, **extra) -> list[dict]:
+    """One {fmt, band, checksum} row per band of every {fmt: decoded
+    array} entry (a 2-D array is one band), each with `extra` merged
+    in — the rows of the pixel-rule codec roundtrip queries."""
+    return [
+        {"fmt": fmt, "band": b, "checksum": c, **extra}
+        for fmt, out in outs.items()
+        for b, c in enumerate(gdal_checksum_image(out))
+    ]

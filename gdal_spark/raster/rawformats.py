@@ -25,6 +25,7 @@ Each re-derives one reference raw driver byte-for-byte:
 
 from __future__ import annotations
 
+import math
 import struct
 
 import numpy as np
@@ -330,8 +331,9 @@ def decode_ngsgeoid(data: bytes):
 # --- JDEM ---------------------------------------------------------------------
 
 def _jdem_angle_str(deg: float) -> str:
-    """degrees -> packed dddmmss 7-char field (first-quadrant only)."""
-    total = int(round(deg * 3600))
+    """degrees -> packed dddmmss 7-char field (first-quadrant only);
+    half seconds snap up, floor(x + 0.5), like the raw_fleet3 oracle."""
+    total = int(math.floor(deg * 3600 + 0.5))
     d, rem = divmod(total, 3600)
     m, s = divmod(rem, 60)
     return f"{d * 10000 + m * 100 + s:07d}"

@@ -138,6 +138,11 @@ def test_jdem_text_records_and_angle_snap():
     out, gt = decode_jdem(blob)
     assert np.allclose(out, a.astype(np.float32))
     assert abs(gt[0] - 139.25) < 1e-9 and abs(gt[3] - 36.0) < 1e-9
+    # an exact half second snaps up (floor(x + 0.5) on both engine and
+    # oracle), never to the even second as Python's round() would
+    assert 35.00125 * 3600 == 126004.5
+    half = encode_jdem(a, 35.00125, 139.25, 36.0, 140.0)
+    assert half[29:36] == b"0350005"
     # row-id cross-check is enforced (jdemdataset.cpp:74)
     bad = bytearray(blob)
     bad[1011 + 6 : 1011 + 9] = b"002"

@@ -1,6 +1,7 @@
 """gdal_retile semantics (osgeo_utils/gdal_retile.py)."""
 
 import numpy as np
+import pytest
 
 from gdal_spark.fixtures.georef import np_image_pixels
 from gdal_spark.operators.retile import (
@@ -29,6 +30,25 @@ def test_grid_matches_reference_formula():
                 assert tile_counts(size, tile, ov) == ref_tile_counts(
                     size, tile, ov
                 ), (size, tile, ov)
+
+
+@pytest.mark.parametrize("overlap", [96, 120, -1])
+def test_overlap_outside_tile_is_rejected(overlap):
+    # overlap == tile used to divide by zero; overlap > tile stepped
+    # the offsets backwards
+    with pytest.raises(ValueError, match="overlap must be"):
+        tile_counts(257, 96, overlap)
+    with pytest.raises(ValueError, match="overlap must be"):
+        list(tile_grid(257, 100, 96, 96, overlap))
+
+
+def test_grid_df_rejects_overlap_outside_tile(spark):
+    from gdal_spark.fixtures.georef import with_image_geo
+
+    geo = with_image_geo(spark.range(2).withColumnRenamed("id", "i"), "i")
+    for overlap in (96, 120):
+        with pytest.raises(ValueError, match="overlap must be"):
+            retile_grid_df(geo, 96, 96, overlap=overlap)
 
 
 def test_tiles_clip_and_cover():

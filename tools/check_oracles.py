@@ -24,10 +24,8 @@ TABLES = [
 
 # freshness ledger: preflight asserts every registered query has a
 # recent green row here (VERDICT r3 ask #10 — re-verification drift)
-CACHE_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".oracle_cache.json",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CACHE_PATH = os.path.join(REPO, ".oracle_cache.json")
 
 
 def load_cache() -> dict:
@@ -66,7 +64,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
     from gdal_spark.session import get_spark
 
@@ -111,7 +109,7 @@ def main():
             greens.append(name)
         print(
             f"[{status}] {name}: spark {sn} rows ({t1-t0:.1f}s) vs duck {on} rows "
-            f"({t2-t1:.1f}s) hash {'=' if sh == oh else f'{sh} != {oh}'}"
+            f"({t2-t1:.1f}s) hash {f'= {sh}' if sh == oh else f'{sh} != {oh}'}"
         )
         if not ok:
             failures.append(name)
