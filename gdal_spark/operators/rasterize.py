@@ -13,9 +13,12 @@ Semantics (re-derived from the reference, not ported):
 
 Scale shape (100 TB story):
 - `rasterize_burn_counts` / `rasterize_tile_add` are a single narrow
-  Arrow-batched pass over the polygon table emitting runs -- no pixel
-  buffers, no shuffle except the final per-tile sum. Polygons never
-  co-reside: each task burns only its own rows.
+  Arrow-batched pass over the polygon table -- no pixel buffers, no
+  shuffle except the final per-tile sum. Polygons never co-reside:
+  each task burns only its own rows. The scanline fill is one array
+  pass per polygon (raster/rasterize.fill_polygon_runs), and
+  `rasterize_tile_add` sums its runs per tile inside each Arrow batch,
+  so it emits one row per touched tile per batch, not one per run.
 - `rasterize_tiles` is the compositing path: polygons explode to the
   tiles their envelope covers (Column math, no UDF), one shuffle on
   (tile_x, tile_y), then applyInPandas burns each 256x256 tile. Hot
@@ -35,7 +38,12 @@ from pyspark.sql import types as T
 
 from gdal_spark.geo.wkb import parse_wkb
 from gdal_spark.raster.checksum import gdal_checksum
-from gdal_spark.raster.rasterize import fill_polygon_runs
+from gdal_spark.raster.rasterize import (
+    clip_runs,
+    expand_ranges,
+    fill_polygon_runs,
+    runs_mask,
+)
 from gdal_spark.tiles import tilemath as tm
 
 TILE = tm.TILE_SIZE
@@ -59,12 +67,22 @@ def _pixel_rings(wkb: bytes, z: int) -> list[np.ndarray]:
     return out
 
 
-def _clip_runs(runs, n: int):
-    for y, xa, xb in runs:
-        xa = max(xa, 0)
-        xb = min(xb, n)
-        if 0 <= y < n and xb > xa:
-            yield y, xa, xb
+def tile_run_sums(runs: np.ndarray, tiles_per_side: int) -> pd.DataFrame:
+    """Split clipped global-grid runs at tile borders and sum the
+    burned pixels per (tile_x, tile_y): one row per touched tile."""
+    tx0 = runs[:, 1] // TILE
+    run, tx = expand_ranges(tx0, (runs[:, 2] - 1) // TILE - tx0 + 1)
+    px = (np.minimum(runs[run, 2], (tx + 1) * TILE)
+          - np.maximum(runs[run, 1], tx * TILE))
+    key = runs[run, 0] // TILE * tiles_per_side + tx
+    tiles, slot = np.unique(key, return_inverse=True)
+    # float64 bincount sums integers exactly below 2**53 pixels
+    sums = np.bincount(slot, weights=px, minlength=len(tiles)).astype(np.int64)
+    return pd.DataFrame(
+        {"tile_x": (tiles % tiles_per_side).astype(np.int32),
+         "tile_y": (tiles // tiles_per_side).astype(np.int32),
+         "px": sums}
+    )
 
 
 def rasterize_burn_counts(zones: DataFrame, z: int) -> DataFrame:
@@ -84,9 +102,8 @@ def rasterize_burn_counts(zones: DataFrame, z: int) -> DataFrame:
         for pdf in batches:
             counts = []
             for wkb in pdf["geometry"]:
-                rings = _pixel_rings(bytes(wkb), z)
-                runs = fill_polygon_runs(rings, n)
-                counts.append(sum(xb - xa for _, xa, xb in _clip_runs(runs, n)))
+                runs = clip_runs(fill_polygon_runs(_pixel_rings(bytes(wkb), z), n), n)
+                counts.append(int((runs[:, 2] - runs[:, 1]).sum()))
             yield pd.DataFrame({"fid": pdf["fid"].astype("int64"), "burned_px": counts})
 
     return zones.select("fid", "geometry").mapInPandas(burn, schema)
@@ -96,8 +113,10 @@ def rasterize_tile_add(zones: DataFrame, z: int) -> DataFrame:
     """MERGE_ALG=ADD with burn value 1: per-tile sum over pixels of the
     number of polygons covering each pixel.
 
-    Emits run/tile overlaps from a narrow pass, then one groupBy(tile)
-    sum — the shuffle payload is runs (tiny), never pixels.
+    Each Arrow batch's runs are split at tile borders and summed per
+    tile inside the batch (tile_run_sums), so the narrow pass emits one
+    row per touched tile; one groupBy(tile) sum merges the batches —
+    the shuffle payload is per-tile sums, never runs or pixels.
     """
     n = TILE * (1 << z)
     schema = T.StructType(
@@ -110,21 +129,10 @@ def rasterize_tile_add(zones: DataFrame, z: int) -> DataFrame:
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            txs, tys, pxs = [], [], []
-            for wkb in pdf["geometry"]:
-                rings = _pixel_rings(bytes(wkb), z)
-                for y, xa, xb in _clip_runs(fill_polygon_runs(rings, n), n):
-                    ty = y // TILE
-                    for tx in range(xa // TILE, (xb - 1) // TILE + 1):
-                        lo = max(xa, tx * TILE)
-                        hi = min(xb, (tx + 1) * TILE)
-                        txs.append(tx)
-                        tys.append(ty)
-                        pxs.append(hi - lo)
-            yield pd.DataFrame(
-                {"tile_x": np.array(txs, dtype=np.int32),
-                 "tile_y": np.array(tys, dtype=np.int32),
-                 "px": np.array(pxs, dtype=np.int64)}
+            runs = [clip_runs(fill_polygon_runs(_pixel_rings(bytes(wkb), z), n), n)
+                    for wkb in pdf["geometry"]]
+            yield tile_run_sums(
+                np.concatenate(runs) if runs else np.empty((0, 3), np.int64), 1 << z
             )
 
     return (
@@ -157,11 +165,8 @@ def cutline_tile_mask(
             continue
         if ys.max() < y0 or ys.min() >= y0 + TILE:
             continue
-        for y, xa, xb in fill_polygon_runs(rings, n, y0, y0 + TILE):
-            lo = max(xa, x0)
-            hi = min(xb, x0 + TILE)
-            if hi > lo:
-                m[y - y0, lo - x0 : hi - x0] = True
+        runs = fill_polygon_runs(rings, n, y0, y0 + TILE) - [y0, x0, x0]
+        m |= runs_mask(runs, TILE, TILE)
     return m
 
 
@@ -268,15 +273,14 @@ def rasterize_tiles(
             rings = _pixel_rings(bytes(row["geometry"]), z)
             local = [r - np.array([off_x, off_y]) for r in rings]
             val = int(row[value_col])
-            for y, xa, xb in fill_polygon_runs(local, TILE):
-                xa = max(xa, 0)
-                xb = min(xb, TILE)
-                if xb > xa:
-                    if merge_alg == "add":
-                        buf[y, xa:xb] += val
-                    else:
-                        buf[y, xa:xb] = val
-                    burned[y, xa:xb] = True
+            # one polygon's runs are disjoint, so a masked add equals
+            # adding run by run
+            m = runs_mask(fill_polygon_runs(local, TILE), TILE, TILE)
+            if merge_alg == "add":
+                buf[m] += val
+            else:
+                buf[m] = val
+            burned |= m
         rec = {
             "tile_x": tx,
             "tile_y": ty,

@@ -1,13 +1,22 @@
 """Distributed tile rendering (gdalwarp + gdal raster tile semantics)
 and overview-pyramid construction.
 
-Pipeline shape (SURVEY.md §2.10, §3.3; apps/gdalalg_raster_tile.cpp):
+Pipeline shape of render_tiles (SURVEY.md §2.10, §3.3;
+apps/gdalalg_raster_tile.cpp):
 
-  images -> covering tiles (Column math)        -- no UDF, no shuffle
+  images -> covering tile ranges (Column math)  -- no UDF, no shuffle
+         -> mapInPandas decode + warp           -- each source decoded
+                                                   ONCE, warped into
+                                                   every tile it covers
+         -> covered windows (offset, size, pixels, mask)
          -> groupBy(tile_x, tile_y)             -- the ONE shuffle
-         -> applyInPandas warp+composite        -- 256x256 buffers
+         -> applyInPandas paste + checksum      -- 256x256 buffers
          -> tiles table (checksum / png bytes)
   z-1 pass: groupBy(parent tile) of 4 children -> 2x2 average
+
+This is gdalwarp's per-source chunk loop: a source's pixels are read
+once and warped chunk by chunk. Encoded payload bytes never cross the
+shuffle; only the bounding window of each warp's coverage mask does.
 
 Warp semantics per gdalwarpkernel.cpp (see raster/resample.py).
 Composite order: ascending image id, last writer wins (mirrors
@@ -50,6 +59,19 @@ def covering_tiles(images: DataFrame, z: int) -> DataFrame:
     )
 
 
+_WINDOW_FLUSH_BYTES = 32 << 20  # window bytes per mapInPandas output frame
+
+
+def _covered_window(mask: np.ndarray) -> tuple[slice, slice]:
+    """Row and column slices bounding the True cells of a 2-D mask;
+    empty slices when there are none."""
+    rows = np.flatnonzero(mask.any(axis=1))
+    if not len(rows):
+        return slice(0, 0), slice(0, 0)
+    cols = np.flatnonzero(mask.any(axis=0))
+    return slice(int(rows[0]), int(rows[-1]) + 1), slice(int(cols[0]), int(cols[-1]) + 1)
+
+
 def render_tiles(
     images: DataFrame,
     z: int,
@@ -67,7 +89,8 @@ def render_tiles(
     (frmts/gti/gdaltileindexdataset.cpp:87-110): sources paint in
     ascending sort order, so the LAST one in that order shows on top.
 
-    `images` needs columns (i, xmin, ymax, w, h). Source pixels:
+    `images` needs columns (i, xmin, ymin, xmax, ymax, w, h). Source
+    pixels:
 
     - decode_payload=True — the REAL pipeline: the `bytes` column is
       decoded per image via raster/codecs.decode_image (fmt-dispatch
@@ -79,6 +102,10 @@ def render_tiles(
       pixels regenerate from value(x,y,c) = (x+y+i+phase_c) % 256
       (georef.np_image_pixels; bit-identical to the decoded lossless
       payloads by construction).
+
+    Each source is decoded (or generated) ONCE, before the shuffle, and
+    warped into every tile it covers; only the covered window of each
+    warp crosses the shuffle (see the module docstring).
 
     Returns one row per (tile, band) with the GDAL 16-bit checksum
     and the count of source-covered pixels.
@@ -95,49 +122,93 @@ def render_tiles(
     if with_data:
         fields.append(T.StructField("data", T.BinaryType()))
     schema = T.StructType(fields)
+    window_schema = T.StructType(
+        [
+            T.StructField("tile_x", T.IntegerType()),
+            T.StructField("tile_y", T.IntegerType()),
+            images.schema[sort_field],
+            T.StructField("win_y", T.IntegerType()),
+            T.StructField("win_x", T.IntegerType()),
+            T.StructField("win_h", T.IntegerType()),
+            T.StructField("win_w", T.IntegerType()),
+            T.StructField("pixels", T.BinaryType()),
+            T.StructField("mask", T.BinaryType()),
+        ]
+    )
+    window_cols = [f.name for f in window_schema.fields]
+
+    def warp(src: np.ndarray, tx: int, ty: int, xmin: float, ymax: float):
+        dfx, dfy = rs.inverse_grid(tx, ty, z, xmin, ymax, res0, tm.ORIGIN, res_z)
+        if resampling == "bilinear":
+            vals, mask = rs.sample_bilinear(src, dfx, dfy)
+            vals = rs.round_to_byte(vals)
+        elif resampling == "cubic":
+            vals, mask = rs.sample_cubic(src, dfx, dfy)
+            vals = rs.round_to_byte(vals)
+        elif resampling == "cubicspline":
+            vals, mask = rs.sample_cubicspline(src, dfx, dfy)
+            vals = rs.round_to_byte(vals)
+        elif resampling == "lanczos":
+            vals, mask = rs.sample_lanczos(src, dfx, dfy)
+            vals = rs.round_to_byte(vals)
+        elif resampling == "average":
+            px = np.arange(TILE, dtype=np.float64)
+            wx0 = -tm.ORIGIN + (tx * TILE + px) * res_z
+            wy_top = tm.ORIGIN - (ty * TILE + px) * res_z
+            x0 = np.broadcast_to(((wx0 - xmin) / res0)[None, :], (TILE, TILE))
+            x1 = x0 + res_z / res0
+            y0 = np.broadcast_to(((ymax - wy_top) / res0)[:, None], (TILE, TILE))
+            y1 = y0 + res_z / res0
+            vals, mask = rs.sample_average(src, x0, x1, y0, y1)
+            vals = rs.round_to_byte(vals)
+        else:
+            vals, mask = rs.sample_nearest(src, dfx, dfy)
+        return vals, mask
+
+    def windows(batches):
+        from gdal_spark.raster.codecs import decode_image
+
+        recs, pending = [], 0
+        for pdf in batches:
+            payload = zip(pdf["bytes"], pdf["fmt"]) if decode_payload else None
+            for i, w, h, xmin, ymax, key, txs, tys in zip(
+                pdf["i"], pdf["w"], pdf["h"], pdf["xmin"], pdf["ymax"],
+                pdf[sort_field], pdf["_txs"], pdf["_tys"],
+            ):
+                if decode_payload:
+                    data, fmt = next(payload)
+                    src = decode_image(bytes(data), str(fmt))
+                else:
+                    src = georef.np_image_pixels(int(i), int(w), int(h))
+                for tx in txs.tolist():
+                    for ty in tys.tolist():
+                        vals, mask = warp(src, tx, ty, float(xmin), float(ymax))
+                        wy, wx = _covered_window(mask)
+                        recs.append((tx, ty, key, wy.start, wx.start,
+                                     wy.stop - wy.start, wx.stop - wx.start,
+                                     vals[wy, wx].astype(np.uint8).tobytes(),
+                                     mask[wy, wx].tobytes()))
+                        pending += (BANDS + 1) * mask[wy, wx].size
+                if pending >= _WINDOW_FLUSH_BYTES:
+                    yield pd.DataFrame(recs, columns=window_cols)
+                    recs, pending = [], 0
+        if recs:
+            yield pd.DataFrame(recs, columns=window_cols)
 
     def composite(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         buf = np.zeros((TILE, TILE, BANDS), dtype=np.uint8)
         covered = np.zeros((TILE, TILE), dtype=bool)
-        for _, row in pdf.sort_values(sort_field, ascending=ascending).iterrows():
-            i, w, h = int(row["i"]), int(row["w"]), int(row["h"])
-            if decode_payload:
-                from gdal_spark.raster.codecs import decode_image
-
-                src = decode_image(bytes(row["bytes"]), str(row["fmt"]))
-            else:
-                src = georef.np_image_pixels(i, w, h)
-            dfx, dfy = rs.inverse_grid(
-                tx, ty, z, float(row["xmin"]), float(row["ymax"]),
-                res0, tm.ORIGIN, res_z,
-            )
-            if resampling == "bilinear":
-                vals, mask = rs.sample_bilinear(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "cubic":
-                vals, mask = rs.sample_cubic(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "cubicspline":
-                vals, mask = rs.sample_cubicspline(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "lanczos":
-                vals, mask = rs.sample_lanczos(src, dfx, dfy)
-                vals = rs.round_to_byte(vals)
-            elif resampling == "average":
-                px = np.arange(TILE, dtype=np.float64)
-                wx0 = -tm.ORIGIN + (tx * TILE + px) * res_z
-                wy_top = tm.ORIGIN - (ty * TILE + px) * res_z
-                x0 = np.broadcast_to(((wx0 - float(row["xmin"])) / res0)[None, :], (TILE, TILE))
-                x1 = x0 + res_z / res0
-                y0 = np.broadcast_to(((float(row["ymax"]) - wy_top) / res0)[:, None], (TILE, TILE))
-                y1 = y0 + res_z / res0
-                vals, mask = rs.sample_average(src, x0, x1, y0, y1)
-                vals = rs.round_to_byte(vals)
-            else:
-                vals, mask = rs.sample_nearest(src, dfx, dfy)
-            buf[mask] = vals[mask]
-            covered |= mask
+        ordered = pdf.sort_values(sort_field, ascending=ascending)
+        for wy, wx, wh, ww, pixels, mask in zip(
+            ordered["win_y"], ordered["win_x"], ordered["win_h"], ordered["win_w"],
+            ordered["pixels"], ordered["mask"],
+        ):
+            win = (slice(wy, wy + wh), slice(wx, wx + ww))
+            m = np.frombuffer(mask, dtype=bool).reshape(wh, ww)
+            vals = np.frombuffer(pixels, dtype=np.uint8).reshape(wh, ww, BANDS)
+            buf[win][m] = vals[m]
+            covered[win] |= m
         n_px = int(covered.sum())
         recs = []
         for b in range(BANDS):
@@ -150,14 +221,21 @@ def render_tiles(
             recs.append(rec)
         return pd.DataFrame(recs)
 
-    cols = ["tile_x", "tile_y", "i", "w", "h", "xmin", "ymax"]
+    cols = ["i", "w", "h", "xmin", "ymax"]
     if decode_payload:
         cols += ["bytes", "fmt"]
     if sort_field not in cols:
         cols.append(sort_field)
+    min_tx, min_ty, max_tx, max_ty = tm.tile_range_cols(
+        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), z
+    )
     return (
-        covering_tiles(images, z)
-        .select(*cols)
+        images.select(
+            *cols,
+            F.sequence(min_tx, max_tx).alias("_txs"),
+            F.sequence(min_ty, max_ty).alias("_tys"),
+        )
+        .mapInPandas(windows, window_schema)
         .groupBy("tile_x", "tile_y")
         .applyInPandas(composite, schema)
     )

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdal_spark.operators.rasterize import _clip_runs, _pixel_rings
-from gdal_spark.raster.rasterize import fill_polygon_runs
+from gdal_spark.operators.rasterize import _pixel_rings
+from gdal_spark.raster.rasterize import clip_runs, fill_polygon_runs
 from gdal_spark.tiles import tilemath as tm
 
 ZONAL_SCHEMA = T.StructType(
@@ -61,7 +61,7 @@ def zonal_stats(zones: DataFrame, z: int) -> DataFrame:
                 cnt = 0
                 vsum = 0
                 vmin, vmax = None, None
-                for y, xa, xb in _clip_runs(fill_polygon_runs(rings, n), n):
+                for y, xa, xb in clip_runs(fill_polygon_runs(rings, n), n).tolist():
                     xs = np.arange(xa, xb, dtype=np.int64)
                     vals = (xs + y) % 256
                     cnt += len(xs)

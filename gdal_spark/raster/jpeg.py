@@ -1,4 +1,5 @@
-"""Pure-numpy baseline JPEG codec (SOF0, 4:4:4, standard Annex K tables).
+"""Pure-numpy JPEG codec: baseline SOF0 and progressive SOF2 streams,
+4:4:4 / 4:2:0 / grayscale, restart intervals, standard Annex K tables.
 
 From-scratch stand-in for the reference's libjpeg driver
 (frmts/jpeg/jpgdataset.cpp:1452,2175). Lossy: parity criterion is
@@ -6,14 +7,18 @@ PSNR >= 40 dB (the same criterion BASELINE.json sets for lossy
 formats), which quality-90 quantization comfortably meets on
 natural/gradient content.
 
-DCT / quantization / zigzag are fully vectorized numpy; only the
-entropy (Huffman) stage is a per-block Python loop, which is fine
-because it runs inside Spark's Arrow-batched UDF workers, already
-parallelized across tasks.
+DCT / quantization / zigzag are fully vectorized numpy: the decoder's
+inverse DCT is one batched matmul `C.T @ blocks @ C` over all blocks
+of a component. Only the entropy (Huffman) stage is a per-block
+Python loop, which is fine because it runs inside Spark's
+Arrow-batched UDF workers, already parallelized across tasks; its
+65,536-entry peek tables are built once per distinct (bits, vals)
+table and shared read-only across decodes.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -596,8 +601,11 @@ class _BitReader:
         return v
 
 
-def _build_decode_table(bits, vals):
-    """Flat 16-bit-peek table: index -> (symbol << 5) | code_length."""
+@functools.lru_cache(maxsize=64)
+def _build_decode_table(bits: tuple, vals: tuple) -> list:
+    """Flat 16-bit-peek table: index -> (symbol << 5) | code_length.
+    Memoized per (bits, vals): streams mostly carry the same Annex K
+    tables, and the returned list is only ever read."""
     table = [0] * 65536
     code = 0
     k = 0
@@ -818,9 +826,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             bpos = 0
             while bpos < len(body):
                 tc_th = body[bpos]
-                bits = list(body[bpos + 1 : bpos + 17])
+                bits = tuple(body[bpos + 1 : bpos + 17])
                 nvals = sum(bits)
-                vals = list(body[bpos + 17 : bpos + 17 + nvals])
+                vals = tuple(body[bpos + 17 : bpos + 17 + nvals])
                 htables[(tc_th >> 4, tc_th & 0xF)] = _build_decode_table(bits, vals)
                 bpos += 17 + nvals
         elif marker == 0xDD:
@@ -929,7 +937,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         blocks = np.zeros((coeffs[cid].shape[0], 64))
         blocks[:, _ZZ] = coeffs[cid]
         blocks = blocks.reshape(-1, 8, 8) * q
-        pix = np.einsum("ji,njk,kl->nil", _C, blocks, _C) + 128.0
+        pix = _C.T @ blocks @ _C + 128.0
         plane = _unblockify(pix, mcus_y * vi * 8, mcus_x * hi * 8)
         # crop to the component's true extent, then replicate up to
         # full resolution (nearest-neighbor chroma upsampling)

@@ -27,6 +27,9 @@ import numpy as np
 
 __all__ = [
     "fill_polygon_runs",
+    "clip_runs",
+    "expand_ranges",
+    "runs_mask",
     "rasterize_polygon",
     "burn_rings",
     "all_touched_mask",
@@ -38,16 +41,23 @@ def fill_polygon_runs(
     height: int,
     y_min: int | None = None,
     y_max: int | None = None,
-) -> list[tuple[int, int, int]]:
+) -> np.ndarray:
     """Scanline-fill a polygon given rings in PIXEL coordinates.
 
-    Returns burn runs as (y, x_start, x_end_exclusive) with the exact
+    Returns burn runs as an (n, 3) int64 array of (y, x_start,
+    x_end_exclusive) rows sorted by (y, x_start), with the exact
     reference rounding (llrasterize.cpp:109,193: floor(intersect+0.5),
-    fill polyInts[i] .. polyInts[i+1]-1). x runs are NOT clipped here;
-    the caller clips to its buffer. y is clipped to [0, height), and
+    fill polyInts[i] .. polyInts[i+1]-1). Runs of one polygon are
+    disjoint. x runs are NOT clipped here; the caller clips to its
+    buffer (see clip_runs). y is clipped to [0, height), and
     optionally to the window [y_min, y_max) — callers rasterizing one
     tile of a world-spanning polygon restrict the scan to their own
     rows instead of walking the full y extent.
+
+    All (edge, scanline) crossings are found in one array pass: each
+    edge expands to its candidate scanlines, the half-open test
+    dy1 <= dy < dy2 keeps the real crossings, and a (y, x) sort pairs
+    even and odd ranks within each scanline.
     """
     ys = np.concatenate([r[:, 1] for r in rings])
     miny = max(int(ys.min()), 0)
@@ -56,49 +66,85 @@ def fill_polygon_runs(
         miny = max(miny, y_min)
     if y_max is not None:
         maxy = min(maxy, y_max - 1)
-    runs: list[tuple[int, int, int]] = []
-    for y in range(miny, maxy + 1):
-        dy = y + 0.5
-        xs: list[int] = []
-        horiz: list[tuple[int, int]] = []
-        for ring in rings:
-            x1 = ring[:-1, 0]
-            y1 = ring[:-1, 1]
-            x2 = ring[1:, 0]
-            y2 = ring[1:, 1]
-            lo = np.minimum(y1, y2)
-            hi = np.maximum(y1, y2)
-            # orient each edge so dy1 < dy2; half-open [dy1, dy2)
-            sel = (dy >= lo) & (dy < hi)
-            if sel.any():
-                ex1 = np.where(y1[sel] < y2[sel], x1[sel], x2[sel])
-                ey1 = lo[sel]
-                ex2 = np.where(y1[sel] < y2[sel], x2[sel], x1[sel])
-                ey2 = hi[sel]
-                xint = (dy - ey1) * (ex2 - ex1) / (ey2 - ey1) + ex1
-                xs.extend(np.floor(xint + 0.5).astype(np.int64).tolist())
-            # bottom-horizontal segments exactly at pixel-center height
-            # (llrasterize.cpp:155-186): an edge with y1 == y2 == dy and
-            # x1 > x2 (ring order) burns floor(x2+0.5)..floor(x1+0.5)-1;
-            # top horizontals (x1 < x2) are skipped — the regular
-            # even-odd loop already covers them.
-            hsel = (y1 == dy) & (y2 == dy) & (x1 > x2)
-            if hsel.any():
-                ha = np.floor(x2[hsel] + 0.5).astype(np.int64)
-                hb = np.floor(x1[hsel] + 0.5).astype(np.int64)
-                horiz.extend(
-                    (xa, xb) for xa, xb in zip(ha.tolist(), hb.tolist()) if xb > xa
-                )
-        xs.sort()
-        row_runs: list[tuple[int, int]] = []
-        for i in range(0, len(xs) - 1, 2):
-            if xs[i + 1] > xs[i]:
-                row_runs.append((xs[i], xs[i + 1]))
-        # merge horizontal runs avoiding double-burn of pixels the
-        # even-odd pass already produced (the bAvoidBurningSamePoints
-        # polyInts2 merge, llrasterize.cpp:210+) so callers can treat
-        # runs as disjoint per polygon (safe under MERGE_ALG=ADD).
-        for xa, xb in horiz:
+    if maxy < miny:
+        return np.empty((0, 3), dtype=np.int64)
+    x1 = np.concatenate([r[:-1, 0] for r in rings]).astype(np.float64)
+    y1 = np.concatenate([r[:-1, 1] for r in rings]).astype(np.float64)
+    x2 = np.concatenate([r[1:, 0] for r in rings]).astype(np.float64)
+    y2 = np.concatenate([r[1:, 1] for r in rings]).astype(np.float64)
+    lo = np.minimum(y1, y2)
+    hi = np.maximum(y1, y2)
+    # orient each edge so dy1 < dy2; half-open [dy1, dy2)
+    up = y1 < y2
+    ex1 = np.where(up, x1, x2)
+    ex2 = np.where(up, x2, x1)
+
+    # candidate scanlines per edge: every y with lo <= y + 0.5 < hi
+    # lies in [floor(lo) - 1, floor(hi)]; the exact test below decides
+    first = np.clip(np.floor(lo) - 1, miny, maxy + 1).astype(np.int64)
+    last = np.clip(np.floor(hi), miny - 1, maxy).astype(np.int64)
+    edge, y = expand_ranges(first, np.maximum(last - first + 1, 0))
+    dy = y + 0.5
+    sel = (dy >= lo[edge]) & (dy < hi[edge])
+    edge, y, dy = edge[sel], y[sel], dy[sel]
+    ey1, ey2, sx1, sx2 = lo[edge], hi[edge], ex1[edge], ex2[edge]
+    xint = (dy - ey1) * (sx2 - sx1) / (ey2 - ey1) + sx1
+    x = np.floor(xint + 0.5).astype(np.int64)
+
+    # even-odd pairing: ranks 2k and 2k+1 of each scanline's sorted xs
+    order = np.lexsort((x, y))
+    y, x = y[order], x[order]
+    new_row = np.ones(len(y), dtype=bool)
+    new_row[1:] = y[1:] != y[:-1]
+    starts = np.flatnonzero(new_row)
+    rank = np.arange(len(y)) - np.repeat(starts, np.diff(np.r_[starts, len(y)]))
+    left = np.flatnonzero(rank % 2 == 0)
+    left = left[left + 1 < len(y)]
+    left = left[y[left + 1] == y[left]]
+    left = left[x[left + 1] > x[left]]
+    runs = np.column_stack([y[left], x[left], x[left + 1]])
+
+    # bottom-horizontal segments exactly at pixel-center height
+    # (llrasterize.cpp:155-186): an edge with y1 == y2 == dy and
+    # x1 > x2 (ring order) burns floor(x2+0.5)..floor(x1+0.5)-1;
+    # top horizontals (x1 < x2) are skipped — the regular even-odd
+    # pass already covers them.
+    hy = np.floor(y1 - 0.5)
+    hsel = (y1 == y2) & (x1 > x2) & (hy + 0.5 == y1) & (hy >= miny) & (hy <= maxy)
+    if hsel.any():
+        runs = _merge_horizontals(
+            runs, hy[hsel].astype(np.int64),
+            np.floor(x2[hsel] + 0.5).astype(np.int64),
+            np.floor(x1[hsel] + 0.5).astype(np.int64),
+        )
+    return runs
+
+
+def expand_ranges(first: np.ndarray, count: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Flatten the integer ranges first[i] .. first[i] + count[i] - 1:
+    returns (i, value) arrays, ranges in order."""
+    owner = np.repeat(np.arange(len(first)), count)
+    value = np.repeat(first - np.cumsum(count) + count, count) + np.arange(len(owner))
+    return owner, value
+
+
+def _merge_horizontals(
+    runs: np.ndarray, hy: np.ndarray, ha: np.ndarray, hb: np.ndarray
+) -> np.ndarray:
+    """Add the bottom-horizontal runs (hy, ha, hb), in ring order, to
+    the even-odd runs of their scanlines, avoiding double-burn of
+    pixels already produced (the bAvoidBurningSamePoints polyInts2
+    merge, llrasterize.cpp:210+) so callers can treat runs as disjoint
+    per polygon (safe under MERGE_ALG=ADD). Only the scanlines that
+    have a horizontal edge are touched."""
+    rows = set(hy.tolist())
+    keep = ~np.isin(runs[:, 0], list(rows))
+    merged = [runs[keep]]
+    for row in sorted(rows):
+        row_runs = [(xa, xb) for _, xa, xb in runs[runs[:, 0] == row].tolist()]
+        for xa, xb in zip(ha[hy == row].tolist(), hb[hy == row].tolist()):
+            if xb <= xa:
+                continue
             cur = [(xa, xb)]
             for ra, rb in row_runs:
                 nxt = []
@@ -112,8 +158,29 @@ def fill_polygon_runs(
                             nxt.append((rb, cb))
                 cur = nxt
             row_runs.extend(cur)
-        runs.extend((y, xa, xb) for xa, xb in row_runs)
-    return runs
+        if row_runs:
+            merged.append(np.array([(row, xa, xb) for xa, xb in row_runs], dtype=np.int64))
+    out = np.concatenate(merged).astype(np.int64, copy=False)
+    return out[np.lexsort((out[:, 1], out[:, 0]))]
+
+
+def clip_runs(runs: np.ndarray, width: int, height: int | None = None) -> np.ndarray:
+    """Clip (y, xa, xb) runs to x in [0, width) and y in [0, height)
+    (height defaults to width), dropping runs left empty."""
+    height = width if height is None else height
+    xa = np.maximum(runs[:, 1], 0)
+    xb = np.minimum(runs[:, 2], width)
+    keep = (runs[:, 0] >= 0) & (runs[:, 0] < height) & (xb > xa)
+    return np.column_stack([runs[keep, 0], xa[keep], xb[keep]])
+
+
+def runs_mask(runs: np.ndarray, height: int, width: int) -> np.ndarray:
+    """Boolean (height, width) mask of disjoint runs (clipped first)."""
+    runs = clip_runs(runs, width, height)
+    edges = np.zeros((height, width + 1), dtype=np.int32)
+    np.add.at(edges, (runs[:, 0], runs[:, 1]), 1)
+    np.add.at(edges, (runs[:, 0], runs[:, 2]), -1)
+    return np.cumsum(edges[:, :width], axis=1) > 0
 
 
 def burn_rings(
@@ -126,12 +193,7 @@ def burn_rings(
     """Burn one polygon into `out` (shape (H, W)); rings already in
     pixel coordinates of `out`. Returns burned-pixel count."""
     h, w = out.shape
-    mask = np.zeros((h, w), dtype=bool)
-    for y, xa, xb in fill_polygon_runs(rings, h):
-        xa = max(xa, 0)
-        xb = min(xb, w)
-        if xb > xa:
-            mask[y, xa:xb] = True
+    mask = runs_mask(fill_polygon_runs(rings, h), h, w)
     if all_touched:
         mask |= all_touched_mask(rings, h, w)
     if merge_alg == "add":

@@ -50,3 +50,23 @@ def test_doc_kml_points_at_root_tile(spark):
     doc = open(os.path.join(root, "doc.kml")).read()
     assert "<href>2/1/1.kml</href>" in doc
     assert "onRegion" in doc and "minLodPixels" in doc
+
+
+def test_doc_kml_root_is_a_written_tile_for_l_shaped_set(spark):
+    """Per-column minima of an L-shaped set name (3, 2, 2), which is not
+    written; the root must be an actual tile, the first in (z, x, y)
+    order."""
+    from gdal_spark.raster.png import encode_png
+
+    arr = np.zeros((8, 8, 3), np.uint8)
+    tiles = spark.createDataFrame(
+        [(3, 3, 2, bytearray(encode_png(arr))), (3, 2, 3, bytearray(encode_png(arr))),
+         (3, 3, 3, bytearray(encode_png(arr)))],
+        "tile_z int, tile_x int, tile_y int, payload binary",
+    )
+    root = os.path.join(tempfile.mkdtemp(), "so3")
+    write_kml_superoverlay(tiles, root)
+    doc = open(os.path.join(root, "doc.kml")).read()
+    assert "<href>3/2/3.kml</href>" in doc
+    assert os.path.exists(os.path.join(root, "3", "2", "3.kml"))
+    assert not os.path.exists(os.path.join(root, "3", "2", "2.kml"))

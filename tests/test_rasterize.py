@@ -142,7 +142,8 @@ def test_fill_polygon_runs_y_window_equals_full_scan():
     full = fill_polygon_runs([ring], 64)
     for y0, y1 in [(0, 64), (8, 16), (20, 21), (50, 60)]:
         win = fill_polygon_runs([ring], 64, y0, y1)
-        assert win == [r for r in full if y0 <= r[0] < y1]
+        want = full[(full[:, 0] >= y0) & (full[:, 0] < y1)]
+        assert win.dtype == want.dtype and np.array_equal(win, want)
 
 
 def test_cutline_tile_mask_matches_global_fill():

@@ -2,6 +2,7 @@
 overview.cpp semantics)."""
 
 import numpy as np
+import pytest
 
 from gdal_spark.fixtures import georef
 from gdal_spark.raster import resample as rs
@@ -273,3 +274,122 @@ def test_kernel_shapes_match_reference_formulas():
     assert abs(rs.lanczos_kernel(np.array([1.0]))[0]) < 1e-12
     assert abs(rs.lanczos_kernel(np.array([2.0]))[0]) < 1e-12
     assert rs.lanczos_kernel(np.array([3.0]))[0] == 0.0
+
+
+def _exchanges(df):
+    """(nodeName, output column names) of every Exchange in the
+    physical plan (the AQE initial plan when AQE is on)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    found, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if "Exchange" in node.nodeName():
+            out = node.output()
+            found.append((node.nodeName(),
+                          [out.apply(k).name() for k in range(out.size())]))
+        kids = node.children()
+        todo.extend(kids.apply(k) for k in range(kids.size()))
+    return found
+
+
+def test_decoded_render_plan_has_one_exchange_without_payload(spark, tmp_path):
+    """Sources decode and warp before the shuffle: the plan over a
+    payload table holds ONE Exchange and the encoded `bytes` column
+    never crosses it."""
+    from gdal_spark.fixtures.images import build_images
+    from gdal_spark.operators.render import render_tiles
+
+    ids = spark.range(6).withColumnRenamed("id", "i")
+    path = str(tmp_path / "payload")
+    build_images(spark, ids_df=ids, with_payload=True).write.parquet(path)
+    imgs = spark.read.parquet(path)
+    assert "bytes" in imgs.columns
+    exchanges = _exchanges(render_tiles(imgs, 12, decode_payload=True))
+    assert len(exchanges) == 1, exchanges
+    assert "bytes" not in exchanges[0][1]
+
+
+def _overlap_images(spark):
+    """Four overlapping sources straddling the corner of z12 tile
+    (1000, 1500) at fractional-pixel offsets, so each spans 2-4 tiles."""
+    res0 = georef.RES0
+    span = tm.resolution(12) * 256
+    bx, by = -tm.ORIGIN + 1000 * span, tm.ORIGIN - 1500 * span
+    rows = []
+    for i, (w, h, dx, dy) in enumerate(
+        [(257, 100, -130.3, 40.6), (100, 257, -60.7, 150.2),
+         (64, 64, -20.5, 20.5), (200, 180, -170.9, 99.1)]
+    ):
+        xmin, ymax = bx + dx * res0, by + dy * res0
+        rows.append((i, w, h, xmin, ymax - h * res0, xmin + w * res0, ymax))
+    return spark.createDataFrame(
+        rows, "i long, w int, h int, xmin double, ymin double, xmax double, ymax double"
+    )
+
+
+def _numpy_composite(geo, tx, ty, z, resampling, ascending):
+    """Local numpy reference: warp every source into the tile in
+    composite order, last writer wins."""
+    res0, res_z = georef.RES0, tm.resolution(z)
+    buf = np.zeros((256, 256, 3), dtype=np.uint8)
+    covered = np.zeros((256, 256), dtype=bool)
+    span = res_z * 256
+    tile_x0, tile_y1 = -tm.ORIGIN + tx * span, tm.ORIGIN - ty * span
+    margin = 4 * res0  # wider than the largest kernel radius (lanczos: 3)
+    for g in sorted(geo, key=lambda g: g["i"], reverse=not ascending):
+        if (g["xmax"] + margin < tile_x0 or g["xmin"] - margin > tile_x0 + span
+                or g["ymin"] - margin > tile_y1 or g["ymax"] + margin < tile_y1 - span):
+            continue
+        src = georef.np_image_pixels(g["i"], g["w"], g["h"])
+        if resampling == "average":
+            px = np.arange(256, dtype=np.float64)
+            x0 = np.broadcast_to(
+                ((-tm.ORIGIN + (tx * 256 + px) * res_z - g["xmin"]) / res0)[None, :], (256, 256))
+            y0 = np.broadcast_to(
+                ((g["ymax"] - (tm.ORIGIN - (ty * 256 + px) * res_z)) / res0)[:, None], (256, 256))
+            vals, mask = rs.sample_average(src, x0, x0 + res_z / res0, y0, y0 + res_z / res0)
+        else:
+            dfx, dfy = rs.inverse_grid(tx, ty, z, g["xmin"], g["ymax"], res0, tm.ORIGIN, res_z)
+            sample = {"near": rs.sample_nearest, "bilinear": rs.sample_bilinear,
+                      "cubic": rs.sample_cubic, "cubicspline": rs.sample_cubicspline,
+                      "lanczos": rs.sample_lanczos}[resampling]
+            vals, mask = sample(src, dfx, dfy)
+        if resampling != "near":
+            vals = rs.round_to_byte(vals)
+        buf[mask] = vals[mask]
+        covered |= mask
+    return buf, int(covered.sum())
+
+
+
+@pytest.mark.parametrize(
+    "resampling,ascending",
+    [("near", True), ("near", False), ("bilinear", True), ("cubic", True),
+     ("cubicspline", True), ("lanczos", False), ("average", True)],
+)
+def test_overlapping_multi_tile_render_matches_numpy(spark, resampling, ascending):
+    from gdal_spark.operators.render import render_tiles
+
+    images = _overlap_images(spark)
+    geo = [r.asDict() for r in images.collect()]
+    rows = render_tiles(images, 12, resampling=resampling, with_data=True,
+                        ascending=ascending).collect()
+    got = {(r["tile_x"], r["tile_y"], r["band"]): r for r in rows}
+    tiles = {(tx, ty) for tx, ty, _ in got}
+    assert {(999, 1499), (1000, 1499), (999, 1500), (1000, 1500)} <= tiles
+    want_nonempty = set()
+    for tx in range(998, 1002):
+        for ty in range(1498, 1502):
+            buf, n_px = _numpy_composite(geo, tx, ty, 12, resampling, ascending)
+            if n_px:
+                want_nonempty.add((tx, ty))
+            if (tx, ty) not in tiles:
+                continue
+            for b in range(3):
+                r = got[(tx, ty, b)]
+                assert r["n_px"] == n_px
+                assert r["checksum"] == gdal_checksum(buf[:, :, b])
+                assert r["data"] == buf[:, :, b].tobytes()
+    assert want_nonempty <= tiles
